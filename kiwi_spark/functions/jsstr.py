@@ -32,8 +32,6 @@ RE_WS_RUN = re.compile(_WS_CLASS + "+")
 RE_TRAILING_WS_NL = re.compile("[ \t]+\n")
 RE_3PLUS_NL = re.compile("\n{3,}")
 
-_WS_SET = frozenset(JS_WS_CHARS)
-
 
 def js_trim(s: str) -> str:
     """Equivalent of JS String.prototype.trim()."""
@@ -43,11 +41,6 @@ def js_trim(s: str) -> str:
 def js_trim_end(s: str) -> str:
     """Equivalent of JS String.prototype.trimEnd()."""
     return s.rstrip(JS_WS_CHARS)
-
-
-def is_js_space(ch: str) -> bool:
-    """Equivalent of /^\\s$/u.test(ch)."""
-    return ch in _WS_SET
 
 
 def collapse_inline_whitespace(s: str) -> str:

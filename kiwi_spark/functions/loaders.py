@@ -478,9 +478,10 @@ def payload_to_text(data: bytes, mime: str | None = None,
 
     Returns (text, file_type) — the engine-wide ingestion entry point
     (loader factory analog, loader/factory.ts:169-…): html→markdown,
-    ics/vcf/xml/eml/mbox→their markdown shapes, docx/xlsx/pptx via the
-    OOXML loaders, everything text-like verbatim. Image/audio/video/pdf
-    payloads return empty text (handled by the multimodal operators)."""
+    ics/vcf/xml/eml/mbox/msg→their markdown shapes, pdf via ``pdf_to_text``,
+    docx/xlsx/pptx/odt/odp via the OOXML loaders, doc/xls/ppt via
+    ``legacy_office``, everything text-like verbatim. Image payloads and
+    unrecognized OLE containers return empty text; no pixel decoder runs."""
     from .format_detect import detect_format
 
     file_type = detect_format(content=data, mime=mime, url=url)

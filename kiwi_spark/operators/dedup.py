@@ -255,16 +255,6 @@ def _minhash_base():
     return F.conv(F.substring(F.md5(F.col("shingle")), 1, 8), 16, 10).cast("long")
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3, num_hashes: int = DEFAULT_NUM_HASHES,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       seed: int = 7) -> DataFrame:
-    """(doc_id, sig array<long>) — k multiply-shift min-hashes, all JVM-side."""
-    exploded = _shingle_df(docs, n, id_col, text_col).select(
-        "doc_id", F.explode("shingles").alias("shingle")
-    )
-    return _signatures_from_exploded(exploded, num_hashes, seed)
-
-
 def _signatures_from_exploded(exploded: DataFrame, num_hashes: int,
                               seed: int = 7,
                               with_count: bool = False) -> DataFrame:

@@ -15,8 +15,6 @@
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -99,14 +97,6 @@ def lineage_rows(df: DataFrame, stage: str, wall_seconds: float,
             F.current_timestamp().alias("created_at"),
         )
     )
-
-
-class StageTimer:
-    def __init__(self) -> None:
-        self.started = time.time()
-
-    def elapsed(self) -> float:
-        return time.time() - self.started
 
 
 def materialize_nodes(nodes: DataFrame, n_buckets: int = 32) -> DataFrame:

@@ -25,7 +25,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 ASSET_SCHEMA = (
     "asset_id string, url string, kind string, payload binary, "
@@ -44,76 +44,6 @@ AUDIO_FEATURES_SCHEMA = (
 FRAME_SAMPLE_SCHEMA = (
     "asset_id string, frame_index int, ts_ms long, frame binary"
 )
-
-VIDEO_METADATA_SCHEMA = (
-    "asset_id string, container string, width int, height int, "
-    "duration_ms long"
-)
-
-AUDIO_METADATA_SCHEMA = (
-    "asset_id string, codec string, sample_rate int, n_channels int, "
-    "duration_ms long"
-)
-
-
-def _probe_metadata(assets: DataFrame, kind: str, probe_name: str,
-                    columns: list[str], schema: str) -> DataFrame:
-    """Shared container-metadata prober: pre-filters to ``kind`` JVM-side
-    (so other kinds' payload bytes never cross the Arrow boundary), then
-    maps each payload through functions.<probe_name> — a tuple matching
-    ``columns`` or None → NULL fields."""
-    import importlib
-
-    def process(batches):
-        import pandas as pd
-
-        probe = getattr(
-            importlib.import_module(f"kiwi_spark.functions.{probe_name}"),
-            f"probe_{kind}",
-        )
-        for batch in batches:
-            rows = []
-            for row in batch.itertuples(index=False):
-                probed = probe(bytes(row.payload or b"")) or (None,) * len(columns)
-                rows.append(
-                    {"asset_id": row.asset_id, **dict(zip(columns, probed))}
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", *columns])
-
-    return (
-        assets.where(F.col("kind") == kind)
-        .select("asset_id", "payload")
-        .mapInPandas(process, schema=schema)
-    )
-
-
-def probe_audio_metadata(assets: DataFrame) -> DataFrame:
-    """audio → (codec, sample_rate, n_channels, duration_ms) from the
-    FRAMING structure of compressed formats (functions.audio_meta: MP3
-    frame walk with false-sync rejection, serial-aware Ogg page walk for
-    Vorbis/Opus incl. chained streams) — real triage metadata with no
-    codec dependency; amplitude features for these formats stay behind
-    ``decode_audio_features``'s documented stub. Unparseable payloads
-    emit NULL fields."""
-    return _probe_metadata(
-        assets, "audio", "audio_meta",
-        ["codec", "sample_rate", "n_channels", "duration_ms"],
-        AUDIO_METADATA_SCHEMA,
-    )
-
-
-def probe_video_metadata(assets: DataFrame) -> DataFrame:
-    """video → (container, width, height, duration_ms) parsed from the
-    CONTAINER structure (functions.video_meta: ISO-BMFF box walk, EBML
-    element walk) — real triage metadata with no codec dependency.
-    Unparseable payloads emit a row with NULL fields (they are still
-    assets; downstream filters decide). Frame CONTENT features remain
-    behind ``sample_video_frames``'s documented stub."""
-    return _probe_metadata(
-        assets, "video", "video_meta",
-        ["container", "width", "height", "duration_ms"],
-        VIDEO_METADATA_SCHEMA,
-    )
 
 
 def decode_bmp(payload: bytes):

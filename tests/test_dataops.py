@@ -106,6 +106,36 @@ def test_minhash_lsh_finds_high_jaccard_pairs(spark, docs):
         assert len(lsh) / len(exact) >= 0.9
 
 
+def test_minhash_shingle_count_equals_shingle_array_size(spark):
+    # the size-ratio filter inside minhash_lsh_pairs' band join is lossless
+    # only while the count carried on the signature rows is the number of
+    # DISTINCT shingles; the repeated-token rows repeat shingles (doc 1 has
+    # 7 trigram positions but 3 distinct trigrams)
+    rows = [
+        (1, "the cat the cat the cat the cat sat"),
+        (2, "a a a a a a a a"),
+        (3, "go go go stop go go go stop"),
+        (4, "two words"),
+        (5, "one"),
+        (6, ""),
+        (7, "  \n\t "),
+        (8, "Mixed CASE mixed case, MIXED case!"),
+    ]
+    sh = dedup._shingle_df(spark.createDataFrame(rows, ["doc_id", "text"]), 3)
+    sizes = {
+        r["doc_id"]: r["n"]
+        for r in sh.select("doc_id", F.size("shingles").alias("n")).collect()
+    }
+    exploded = sh.select("doc_id", F.explode("shingles").alias("shingle"))
+    counts = {
+        r["doc_id"]: r["n_shingles"]
+        for r in dedup._signatures_from_exploded(
+            exploded, dedup.DEFAULT_NUM_HASHES, with_count=True
+        ).collect()
+    }
+    assert counts == sizes == {d: len(_py_shingles(t)) for d, t in rows}
+
+
 def test_simhash_pairs_hamming(spark, docs):
     pairs = dedup.simhash_pairs(docs.limit(120), max_hamming=3).collect()
     for r in pairs:
