@@ -9,7 +9,9 @@ re-ran the global L12 pass per batch. This module restates the indexed
 behavior Spark-first: a persisted ``link_keys`` table (entity_id, key) is
 the pg index analog; a new batch semi-joins it to find the *touched* set,
 recomputes linking + canonicalization for that set only, and copies every
-untouched canonical row through unchanged.
+untouched canonical row through unchanged. The recompute-and-commit half
+(``apply_touched``, ``maintain_search_index``) is shared with document
+removal (delta_remove), which differs only in how it finds the touched set.
 
 Correctness rests on three provable closure properties (all linking
 matchers are pure key equalities — link.py ``_with_keys``):
@@ -116,6 +118,13 @@ def touched_buckets(ids: DataFrame, id_col: str, n_buckets: int) -> list[int]:
     )
 
 
+def _view_buckets(cat, ids: DataFrame, id_col: str) -> list[int] | None:
+    """``touched_buckets`` under the warehouse's doc-view layout; None on
+    pre-layout warehouses (no ``doc_view_buckets`` property)."""
+    n_buckets = cat.get_property("doc_view_buckets")
+    return touched_buckets(ids, id_col, int(n_buckets)) if n_buckets else None
+
+
 def _pruned(df: DataFrame, col: str, buckets: list[int] | None) -> DataFrame:
     """bucket IN (...) pre-filter ahead of a touched-set semi-join; no-op
     on pre-layout warehouses (buckets None) or when the column is absent."""
@@ -169,13 +178,139 @@ def touched_entity_ids(
 class DeltaStats:
     n_touched_entities: int = 0
     n_touched_doc_edges: int = 0
-    n_delta_nodes: int = 0
-    n_delta_edges: int = 0
+    n_removed_entities: int = 0
     timings: dict = field(default_factory=dict)
 
 
-def _anti(df: DataFrame, ids: DataFrame, on: str) -> DataFrame:
-    return df.join(ids.withColumnRenamed("entity_id", on), on, "leftanti")
+def apply_touched(
+    spark: SparkSession,
+    cat,
+    batch_id: str,
+    e_t: DataFrame,
+    touched_nodes_doc: DataFrame,
+    touched_edge_rows: DataFrame,
+    touched_mentions_doc: DataFrame,
+    touched_edge_ids: DataFrame,
+    link_mode: str,
+    n_buckets: int,
+    timings: dict,
+) -> DataFrame:
+    """Recompute the canonical groups of a touched set and commit them —
+    the half of a delta pass that add (``delta_relink``) and remove
+    (``delta_remove.delta_unlink``) share; they differ only in how they
+    find E_t and its doc rows. Every commit is a merge-on-read append
+    tagged with ``batch_id`` and masking the closure-property-2
+    predicates, so a crash-retry skips what already landed. Returns the
+    search-index edge mask for ``maintain_search_index``."""
+    import time as _time
+    from concurrent import futures
+
+    # --- id_map: append the recomputed touched mapping, equality-delete
+    # the touched ids from earlier snapshots — O(touched) written bytes,
+    # the copy-through happens at read time as a broadcast anti-join
+    t0 = _time.time()
+    delta_map = entity_id_map(touched_nodes_doc, mode=link_mode).localCheckpoint(
+        eager=False
+    )
+    if not cat.batch_appended("id_map", batch_id):
+        cat.commit(
+            delta_map, "id_map", stage="deduplicating", append=True,
+            batch_id=batch_id, delete_sets=[(e_t, ["entity_id"])],
+        )
+    timings["id_map"] = round(_time.time() - t0, 3)
+
+    # --- dirty groups re-aggregate from the touched doc rows alone
+    # (closure property 3)
+    t0 = _time.time()
+    er = rewrite_edges(touched_edge_rows, cat.read(spark, "id_map"))
+    edges_delta = aggregate_edges(er).localCheckpoint(eager=False)
+    nodes_delta = canonical_nodes(touched_nodes_doc, delta_map)
+    mentions_delta = rewrite_mentions(
+        touched_mentions_doc, delta_map, edge_id_mapping(er, edges_delta)
+    )
+
+    # edge-index mask (consumed after the commits below): old canonical
+    # edge ids with a touched endpoint — including ids of groups that
+    # DISSOLVE into self-loops or vanish from the new table — plus the
+    # delta re-add ids. Computed from the pre-commit snapshot's paths,
+    # which stay readable after the commit (commits never delete data dirs).
+    e_t_src = e_t.withColumnRenamed("entity_id", "src_id")
+    e_t_dst = e_t.withColumnRenamed("entity_id", "dst_id")
+    edges_old = cat.read(spark, "edges")
+    edge_index_mask = (
+        edges_old.join(e_t_src, "src_id", "leftsemi")
+        .unionByName(edges_old.join(e_t_dst, "dst_id", "leftsemi"))
+        .select(F.col("edge_id").alias("id"))
+        .unionByName(edges_delta.select(F.col("edge_id").alias("id")))
+        .distinct()
+    )
+
+    # merge-on-read commits: append the materialized delta rows, mask the
+    # touched rows of earlier snapshots with equality deletes (closure
+    # property 2 predicates) — written bytes are O(touched), and the
+    # copy-through moves to read time as broadcast anti-joins. Cost
+    # traded: between compactions the bucket clustering / compact_key
+    # row-group stats only hold within each snapshot's files (the
+    # auto-compaction in incremental_add/remove restores them).
+    mor_jobs = [
+        (
+            "nodes",
+            materialize_nodes(nodes_delta, n_buckets),
+            [(e_t, ["entity_id"])],
+        ),
+        (
+            "edges",
+            materialize_edges(edges_delta, n_buckets),
+            [(e_t_src, ["src_id"]), (e_t_dst, ["dst_id"])],
+        ),
+        (
+            "mentions",
+            materialize_mentions(mentions_delta, n_buckets),
+            [(e_t, ["entity_id"]), (touched_edge_ids, ["edge_id"])],
+        ),
+    ]
+
+    def _mor_commit(job):
+        table, df, delete_sets = job
+        if not cat.batch_appended(table, batch_id):
+            cat.commit(
+                df, table, stage="saving", append=True, batch_id=batch_id,
+                delete_sets=delete_sets,
+            )
+
+    with futures.ThreadPoolExecutor(max_workers=3) as pool:
+        list(pool.map(_mor_commit, mor_jobs))
+    timings["commit"] = round(_time.time() - t0, 3)
+    return edge_index_mask
+
+
+def maintain_search_index(
+    spark: SparkSession,
+    cat,
+    e_t: DataFrame,
+    batch_id: str,
+    edge_index_mask: DataFrame,
+    timings: dict,
+) -> None:
+    """Bring the ranked-search index up to date after ``apply_touched``.
+    Gate on ALL five index tables (ADVICE r5): a crash during the parallel
+    five-table commit can leave e.g. ivf_centroids missing, and the delta
+    maintenance would FileNotFoundError — a partial index is instead
+    rebuilt wholesale (which also repairs the crash)."""
+    import time as _time
+
+    from ..plans.search_index import SEARCH_INDEX_TABLES, has_search_index
+
+    t0 = _time.time()
+    if has_search_index(cat):
+        delta_search_index(spark, cat, e_t, batch_id, edge_index_mask)
+    elif any(cat.exists(t) for t in SEARCH_INDEX_TABLES):
+        from .. import pipeline
+
+        pipeline._commit_search_index(cat, spark)
+    else:
+        return
+    timings["search_index"] = round(_time.time() - t0, 3)
 
 
 def delta_relink(
@@ -204,40 +339,16 @@ def delta_relink(
         link_mode,
     )
     stats.n_touched_entities = e_t.count()
-    view_buckets = cat.get_property("doc_view_buckets")
-    bs = (
-        touched_buckets(e_t, "entity_id", int(view_buckets))
-        if view_buckets else None
-    )
-    stats.timings["touched"] = round(_time.time() - t0, 3)
+    bs = _view_buckets(cat, e_t, "entity_id")
 
-    # --- id_map: merge-on-read delta commit (append recomputed touched
-    # mapping + equality-delete the touched ids from earlier snapshots) —
-    # O(touched) written bytes, the copy-through happens at read time as
-    # a broadcast anti-join
-    t0 = _time.time()
+    # --- touched doc rows (closure property 3). The two endpoint
+    # semi-joins carry bucket pre-filters (sb partition prune / db
+    # row-group-stats prune) and materialize the touched ROWS once.
     touched_nodes_doc = (
         _pruned(cat.read(spark, "nodes_doc"), "eb", bs)
         .join(e_t, "entity_id", "leftsemi")
         .localCheckpoint(eager=False)
     )
-    delta_map = entity_id_map(touched_nodes_doc, mode=link_mode).localCheckpoint(
-        eager=False
-    )
-    if not cat.batch_appended("id_map", batch_id):
-        cat.commit(
-            delta_map, "id_map", stage="deduplicating", append=True,
-            batch_id=batch_id, delete_sets=[(e_t, ["entity_id"])],
-        )
-    id_map_new = cat.read(spark, "id_map")
-    stats.timings["id_map"] = round(_time.time() - t0, 3)
-
-    # --- touched doc edges / mentions (closure property 3). The two
-    # endpoint semi-joins carry bucket pre-filters (sb partition prune /
-    # db row-group-stats prune) and materialize the touched ROWS once,
-    # replacing the round-5 shape that re-scanned edges_doc a third time
-    # to turn ids back into rows.
-    t0 = _time.time()
     edges_doc = cat.read(spark, "edges_doc")
     touched_edge_rows = (
         _pruned(edges_doc, "sb", bs)
@@ -254,14 +365,7 @@ def delta_relink(
     )
     touched_edge_ids = touched_edge_rows.select("edge_id")
     stats.n_touched_doc_edges = touched_edge_rows.count()
-    er = rewrite_edges(touched_edge_rows, id_map_new)
-    edges_delta = aggregate_edges(er).localCheckpoint(eager=False)
-    nodes_delta = canonical_nodes(touched_nodes_doc, delta_map)
-
-    ebs = (
-        touched_buckets(touched_edge_ids, "edge_id", int(view_buckets))
-        if view_buckets else None
-    )
+    ebs = _view_buckets(cat, touched_edge_ids, "edge_id")
     mentions_doc = cat.read(spark, "mentions_doc")
     touched_mentions_doc = (
         _pruned(mentions_doc, "mb", bs)
@@ -273,76 +377,13 @@ def delta_relink(
         )
         .dropDuplicates(["mention_id"])
     )
-    mentions_delta = rewrite_mentions(
-        touched_mentions_doc, delta_map, edge_id_mapping(er, edges_delta)
+    stats.timings["touched"] = round(_time.time() - t0, 3)
+
+    edge_index_mask = apply_touched(
+        spark, cat, batch_id, e_t, touched_nodes_doc, touched_edge_rows,
+        touched_mentions_doc, touched_edge_ids, link_mode, n_buckets,
+        stats.timings,
     )
-    stats.timings["delta_compute"] = round(_time.time() - t0, 3)
-
-    # --- canonical tables: merge-on-read delta commits -------------------
-    t0 = _time.time()
-    edges_old = cat.read(spark, "edges")
-
-    # edge-index mask (consumed after the commit below): old canonical
-    # edge ids with a touched endpoint — including ids of groups that
-    # DISSOLVE into self-loops and vanish from the new table — plus the
-    # delta re-add ids. Computed from the old snapshot's paths, which stay
-    # readable after the commit (commits never delete data dirs).
-    edge_index_mask = (
-        edges_old.join(
-            e_t.withColumnRenamed("entity_id", "src_id"), "src_id", "leftsemi"
-        )
-        .unionByName(
-            edges_old.join(
-                e_t.withColumnRenamed("entity_id", "dst_id"),
-                "dst_id",
-                "leftsemi",
-            )
-        )
-        .select(F.col("edge_id").alias("id"))
-        .unionByName(edges_delta.select(F.col("edge_id").alias("id")))
-        .distinct()
-    )
-
-    # merge-on-read commits: append the materialized delta rows, mask the
-    # touched rows of earlier snapshots with equality deletes (closure
-    # property 2 predicates) — written bytes are O(touched), and the
-    # copy-through moves to read time as broadcast anti-joins. Cost
-    # traded: between compactions the bucket clustering / compact_key
-    # row-group stats only hold within each snapshot's files (the
-    # auto-compaction in incremental_add restores them).
-    from concurrent.futures import ThreadPoolExecutor
-
-    e_t_src = e_t.withColumnRenamed("entity_id", "src_id")
-    e_t_dst = e_t.withColumnRenamed("entity_id", "dst_id")
-    mor_jobs = [
-        (
-            "nodes",
-            materialize_nodes(nodes_delta, n_buckets),
-            [(e_t, ["entity_id"])],
-        ),
-        (
-            "edges",
-            materialize_edges(edges_delta, n_buckets),
-            [(e_t_src, ["src_id"]), (e_t_dst, ["dst_id"])],
-        ),
-        (
-            "mentions",
-            materialize_mentions(mentions_delta, n_buckets),
-            [(e_t, ["entity_id"]), (touched_edge_ids, ["edge_id"])],
-        ),
-    ]
-
-    def _mor_commit(job):
-        table, df, delete_sets = job
-        if not cat.batch_appended(table, batch_id):
-            cat.commit(
-                df, table, stage="saving", append=True, batch_id=batch_id,
-                delete_sets=delete_sets,
-            )
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(_mor_commit, mor_jobs))
-    stats.timings["commit"] = round(_time.time() - t0, 3)
 
     # --- link_keys: fast-append the batch's key rows ---------------------
     if not cat.batch_appended("link_keys", batch_id):
@@ -351,44 +392,8 @@ def delta_relink(
             batch_id=batch_id,
         )
 
-    # --- incremental search index (MOR, bounded commit). Gate on ALL five
-    # index tables (ADVICE r5): a crash during the parallel five-table
-    # commit can leave e.g. ivf_centroids missing, and the delta
-    # maintenance would FileNotFoundError — a partial index is instead
-    # rebuilt wholesale (which also repairs the crash).
-    from ..plans.search_index import SEARCH_INDEX_TABLES, has_search_index
-
-    if has_search_index(cat):
-        t0 = _time.time()
-        delta_search_index(spark, cat, e_t, batch_id, edge_index_mask)
-        stats.timings["search_index"] = round(_time.time() - t0, 3)
-    elif any(cat.exists(t) for t in SEARCH_INDEX_TABLES):
-        from ..pipeline import _commit_search_index
-
-        t0 = _time.time()
-        _commit_search_index(cat, spark)
-        stats.timings["search_index"] = round(_time.time() - t0, 3)
-
-    # stats from the COMMITTED tables (delta rows ≡ rows with a touched
-    # id, closure property 2) — counting nodes_delta/edges_delta directly
-    # would re-execute the whole delta DAG including the fold UDF
-    nodes_now = cat.read(spark, "nodes")
-    stats.n_delta_nodes = nodes_now.join(e_t, "entity_id", "leftsemi").count()
-    edges_now = cat.read(spark, "edges")
-    stats.n_delta_edges = (
-        edges_now.join(
-            e_t.withColumnRenamed("entity_id", "src_id"), "src_id", "leftsemi"
-        )
-        .select("edge_id")
-        .unionByName(
-            edges_now.join(
-                e_t.withColumnRenamed("entity_id", "dst_id"),
-                "dst_id",
-                "leftsemi",
-            ).select("edge_id")
-        )
-        .distinct()
-        .count()
+    maintain_search_index(
+        spark, cat, e_t, batch_id, edge_index_mask, stats.timings
     )
     return stats
 
@@ -482,12 +487,12 @@ def delta_search_index(
             ["vec_id"],
         ),
     ]
-    for df, table, delete_keys, delete_on in jobs:
+    for df, table, delete_ids, delete_on in jobs:
         if cat.batch_appended(table, batch_id):
             continue
         cat.commit(
             df, table, stage="indexing", append=True, batch_id=batch_id,
-            delete_keys=delete_keys, delete_on=delete_on,
+            delete_sets=[(delete_ids, delete_on)],
         )
         snap = cat.current_snapshot(table)
         if len(snap.get("deletes") or []) >= INDEX_COMPACT_AFTER:

@@ -1,7 +1,10 @@
 """Incremental document removal — the reference's delete-file workflow
 (apps/worker/workflows/delete-file.ts:34-100, delete-graph-files.ts),
 restated on the delta-relink closure machinery so a removal costs
-O(removed + touched), not a from-scratch rebuild.
+O(removed + touched), not a from-scratch rebuild. Only finding the touched
+set is removal-specific; the recompute and the commits that follow are
+``delta_link.apply_touched`` and ``maintain_search_index``, the same code
+an add runs.
 
 Reference semantics per file: cascade-delete the file's text units
 (delete-file.ts:52), delete entities/relationships whose LAST source came
@@ -69,36 +72,19 @@ idempotency check.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .delta_link import _pruned, delta_search_index, touched_buckets
-from .link import (
-    aggregate_edges,
-    canonical_nodes,
-    edge_id_mapping,
-    entity_id_map,
-    rewrite_edges,
-    rewrite_mentions,
-)
-from .materialize import (
-    materialize_edges,
-    materialize_mentions,
-    materialize_nodes,
+from .delta_link import (
+    DeltaStats,
+    _pruned,
+    _view_buckets,
+    apply_touched,
+    maintain_search_index,
 )
 
 # doc-level views masked by url when their document is removed
 DOC_VIEWS_BY_URL = ("text", "raw_graph", "units", "nodes_doc", "edges_doc",
                     "mentions_doc")
-
-
-@dataclass
-class RemoveStats:
-    n_removed_entities: int = 0
-    n_touched_entities: int = 0
-    n_touched_doc_edges: int = 0
-    timings: dict = field(default_factory=dict)
 
 
 def removal_sets(
@@ -130,11 +116,7 @@ def removal_sets(
             .unionByName(e_r)
             .distinct()
         )
-        view_buckets = cat.get_property("doc_view_buckets")
-        bs0 = (
-            touched_buckets(e_t, "entity_id", int(view_buckets))
-            if view_buckets else None
-        )
+        bs0 = _view_buckets(cat, e_t, "entity_id")
         edges_doc = cat.read(spark, "edges_doc")
         touched_edges = (
             _pruned(edges_doc, "sb", bs0)
@@ -183,7 +165,7 @@ def _mask_by(spark, cat, table: str, keys: DataFrame, on: list[str],
         return
     empty = spark.createDataFrame([], cat.table_schema(spark, table))
     cat.commit(empty, table, stage=stage, append=True, batch_id=batch_id,
-               delete_keys=keys, delete_on=on)
+               delete_sets=[(keys, on)])
 
 
 def delta_unlink(
@@ -193,7 +175,7 @@ def delta_unlink(
     batch_id: str,
     link_mode: str = "parity",
     n_buckets: int = 32,
-) -> RemoveStats:
+) -> DeltaStats:
     """Remove the given urls' documents from the warehouse: mask their doc
     rows, recompute the touched canonical groups from the survivors, mask
     stale canonical rows — result ≡ a from-scratch build on the complement
@@ -201,7 +183,7 @@ def delta_unlink(
     persisted removal sets + per-table batch tags."""
     import time as _time
 
-    stats = RemoveStats()
+    stats = DeltaStats()
     t0 = _time.time()
     urls = urls.select("url").distinct().localCheckpoint(eager=True)
     e_r, e_t, touched_edge_ids = removal_sets(spark, cat, urls, batch_id)
@@ -219,35 +201,19 @@ def delta_unlink(
     _mask_by(spark, cat, "link_keys", e_r, ["entity_id"], batch_id, "deleting")
     stats.timings["mask_docs"] = round(_time.time() - t0, 3)
 
-    # --- recompute the touched groups from the SURVIVING doc rows.
-    # Touched-bucket pre-filters prune the doc-view scans (partition dirs
-    # for eb/sb/mb, row-group stats for db) exactly as in the add path.
-    t0 = _time.time()
-    view_buckets = cat.get_property("doc_view_buckets")
-    bs = (
-        touched_buckets(e_t, "entity_id", int(view_buckets))
-        if view_buckets else None
-    )
-    ebs = (
-        touched_buckets(touched_edge_ids, "edge_id", int(view_buckets))
-        if view_buckets else None
-    )
+    # --- the touched doc rows, read from the SURVIVING (just-masked) views:
+    # ``Catalog.read`` fixes the snapshot when it is called, so these reads
+    # must follow the masks above. Touched-bucket pre-filters prune the
+    # doc-view scans (partition dirs for eb/sb/mb, row-group stats for db)
+    # exactly as in the add path.
+    bs = _view_buckets(cat, e_t, "entity_id")
+    ebs = _view_buckets(cat, touched_edge_ids, "edge_id")
     survivors = e_t.join(e_r, "entity_id", "leftanti")
     touched_nodes_doc = (
         _pruned(cat.read(spark, "nodes_doc"), "eb", bs)
         .join(survivors, "entity_id", "leftsemi")
         .localCheckpoint(eager=False)
     )
-    delta_map = entity_id_map(touched_nodes_doc, mode=link_mode).localCheckpoint(
-        eager=False
-    )
-    if not cat.batch_appended("id_map", batch_id):
-        cat.commit(
-            delta_map, "id_map", stage="deduplicating", append=True,
-            batch_id=batch_id, delete_sets=[(e_t, ["entity_id"])],
-        )
-    id_map_new = cat.read(spark, "id_map")
-
     # every touched edge has an endpoint in E_t, so the id semi-join only
     # needs the union of the two bucket-pruned endpoint legs
     edges_doc = cat.read(spark, "edges_doc")
@@ -261,10 +227,6 @@ def delta_unlink(
         )
         .dropDuplicates(["edge_id"])
     )
-    er = rewrite_edges(surviving_touched_edges, id_map_new)
-    edges_delta = aggregate_edges(er).localCheckpoint(eager=False)
-    nodes_delta = canonical_nodes(touched_nodes_doc, delta_map)
-
     mentions_doc = cat.read(spark, "mentions_doc")
     touched_mentions_doc = (
         _pruned(mentions_doc, "mb", bs)
@@ -276,69 +238,13 @@ def delta_unlink(
         )
         .dropDuplicates(["mention_id"])
     )
-    mentions_delta = rewrite_mentions(
-        touched_mentions_doc, delta_map, edge_id_mapping(er, edges_delta)
+
+    edge_index_mask = apply_touched(
+        spark, cat, batch_id, e_t, touched_nodes_doc, surviving_touched_edges,
+        touched_mentions_doc, touched_edge_ids, link_mode, n_buckets,
+        stats.timings,
     )
-    stats.timings["delta_compute"] = round(_time.time() - t0, 3)
-
-    # --- canonical tables: masks + surviving-group re-adds ---------------
-    t0 = _time.time()
-    edges_old = cat.read(spark, "edges")
-    e_t_src = e_t.withColumnRenamed("entity_id", "src_id")
-    e_t_dst = e_t.withColumnRenamed("entity_id", "dst_id")
-    # search-index edge mask from the PRE-commit snapshot (includes groups
-    # that dissolve entirely) plus the re-added delta ids
-    edge_index_mask = (
-        edges_old.join(e_t_src, "src_id", "leftsemi")
-        .unionByName(edges_old.join(e_t_dst, "dst_id", "leftsemi"))
-        .select(F.col("edge_id").alias("id"))
-        .unionByName(edges_delta.select(F.col("edge_id").alias("id")))
-        .distinct()
+    maintain_search_index(
+        spark, cat, e_t, batch_id, edge_index_mask, stats.timings
     )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    mor_jobs = [
-        (
-            "nodes",
-            materialize_nodes(nodes_delta, n_buckets),
-            [(e_t, ["entity_id"])],
-        ),
-        (
-            "edges",
-            materialize_edges(edges_delta, n_buckets),
-            [(e_t_src, ["src_id"]), (e_t_dst, ["dst_id"])],
-        ),
-        (
-            "mentions",
-            materialize_mentions(mentions_delta, n_buckets),
-            [(e_t, ["entity_id"]), (touched_edge_ids, ["edge_id"])],
-        ),
-    ]
-
-    def _mor_commit(job):
-        table, df, delete_sets = job
-        if not cat.batch_appended(table, batch_id):
-            cat.commit(
-                df, table, stage="saving", append=True, batch_id=batch_id,
-                delete_sets=delete_sets,
-            )
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(_mor_commit, mor_jobs))
-    stats.timings["commit"] = round(_time.time() - t0, 3)
-
-    # --- search index: same maintenance contract as the add path ---------
-    from ..plans.search_index import SEARCH_INDEX_TABLES, has_search_index
-
-    if has_search_index(cat):
-        t0 = _time.time()
-        delta_search_index(spark, cat, e_t, batch_id, edge_index_mask)
-        stats.timings["search_index"] = round(_time.time() - t0, 3)
-    elif any(cat.exists(t) for t in SEARCH_INDEX_TABLES):
-        from ..pipeline import _commit_search_index
-
-        t0 = _time.time()
-        _commit_search_index(cat, spark)
-        stats.timings["search_index"] = round(_time.time() - t0, 3)
     return stats

@@ -1,10 +1,12 @@
 """Stage 5: materialize nodes/edges/mentions + lineage/metrics.
 
-* entity-hash bucketing: outputs are repartitioned by a bucket column
-  ``bucket = pmod(xxhash64(id), n_buckets)`` and written
-  partitionBy(bucket) — the parquet stand-in for Iceberg's
-  ``bucket(entity_id)`` partition transform (SURVEY §1.2), giving
-  partition-pruned point lookups and co-partitioned graph joins.
+* entity-hash bucketing: outputs carry a bucket column
+  ``bucket = pmod(xxhash64(id), n_buckets)`` and are repartitioned by it,
+  so all rows of one bucket land in the same output file (nodes are also
+  sorted by ``compact_key`` within each file for tight row-group stats).
+  The tables are committed without a ``partition_by`` spec: ``bucket`` is
+  a plain data column, not a hive partition directory, so readers get no
+  partition pruning from it — only the write clustering.
 * deterministic embeddings (L13 substitute): hashing-TF of the description
   into a 64-dim float array via one Arrow-vectorized pandas UDF — used by
   query-side ranking (plans.queries) and similarity ops.

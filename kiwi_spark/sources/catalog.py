@@ -135,7 +135,6 @@ class Catalog:
     # -- commit / read -----------------------------------------------------
     def commit(self, df, table: str, stage: str | None = None,
                append: bool = False, batch_id: str | None = None,
-               delete_keys=None, delete_on: list[str] | None = None,
                batch_ids: list[str] | None = None,
                delete_sets: list[tuple] | None = None,
                partition_by: list[str] | None = None,
@@ -157,29 +156,23 @@ class Catalog:
         the snapshot references the previous snapshot's dirs as well —
         an Iceberg fast-append (no rewrite of existing data).
 
-        ``delete_keys`` + ``delete_on`` (requires ``append=True``) add an
-        Iceberg *equality-delete* to the same commit: delete_keys is a
-        DataFrame of key tuples, delete_on the key column names. Readers
-        anti-join the delete set against rows from EARLIER snapshots only —
-        rows appended by this commit (or later) are not affected, exactly
-        Iceberg's sequence-number rule. This makes incremental maintenance
-        commits O(changed rows): old rows are masked, not rewritten.
-        Read amplification grows with the delete chain; ``compact()``
-        rewrites the table to a single clean snapshot.
-
-        ``delete_sets`` is the multi-predicate form: a list of
-        (keys_df, key_cols) pairs, each applied as an independent
-        anti-join — a row from an earlier snapshot is masked if ANY set
-        matches it (e.g. edges deleted by src_id ∈ S plus dst_id ∈ S).
+        ``delete_sets`` (requires ``append=True``) adds Iceberg
+        *equality-deletes* to the same commit: a list of (keys_df,
+        key_cols) pairs, each applied as an independent anti-join — a row
+        is masked if ANY set matches it (e.g. edges deleted by src_id ∈ S
+        plus dst_id ∈ S). Readers apply a delete to rows from EARLIER
+        snapshots only — rows appended by this commit (or later) are not
+        affected, exactly Iceberg's sequence-number rule. This makes
+        incremental maintenance commits O(changed rows): old rows are
+        masked, not rewritten. Read amplification grows with the delete
+        chain; ``compact()`` rewrites the table to a single clean snapshot.
 
         ``batch_id`` tags the snapshot with an idempotency key (Iceberg's
         wap.id analog): retried incremental batches check
         ``batch_appended`` and skip instead of double-appending."""
-        all_deletes = list(delete_sets or [])
-        if delete_keys is not None:
-            all_deletes.append((delete_keys, delete_on))
-        if all_deletes and not (
-            append and all(cols for _, cols in all_deletes)
+        delete_sets = delete_sets or []
+        if delete_sets and not (
+            append and all(cols for _, cols in delete_sets)
         ):
             raise ValueError("delete sets require append=True and key columns")
         manifest = self._read_manifest(table) or {"current": None, "snapshots": []}
@@ -207,7 +200,7 @@ class Catalog:
             clustered.write.mode("overwrite").partitionBy(*layout).parquet(out)
         else:
             df.write.mode("overwrite").parquet(out)
-        for i, (keys_df, cols) in enumerate(all_deletes):
+        for i, (keys_df, cols) in enumerate(delete_sets):
             suffix = f"-deletes{i if i else ''}"
             keys_df.select(*cols).write.mode("overwrite").parquet(
                 os.path.join(self.warehouse, table, snap_dir + suffix)
@@ -220,7 +213,7 @@ class Catalog:
             )
             dirs = (prev.get("dirs") or [prev["dir"]]) + [snap_dir]
             deletes = list(prev.get("deletes") or [])
-        for i, (_keys_df, cols) in enumerate(all_deletes):
+        for i, (_keys_df, cols) in enumerate(delete_sets):
             suffix = f"-deletes{i if i else ''}"
             deletes.append(
                 {"dir": snap_dir + suffix, "on": list(cols), "seq": next_id}

@@ -4,10 +4,11 @@ pass, search-index maintenance via bounded merge-on-read commits."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from kiwi_spark.operators.delta_link import link_keys_df, touched_entity_ids
-from kiwi_spark.pipeline import incremental_add, run_pipeline
+from kiwi_spark.pipeline import incremental_add, incremental_remove, run_pipeline
 from kiwi_spark.sources.catalog import Catalog
 from kiwi_spark.sources.pages import pages_df
 
@@ -198,15 +199,14 @@ def test_mor_equality_deletes(spark, tmp_path):
     cat.commit(
         spark.createDataFrame([(2, "b2"), (4, "d")], "id int, v string"),
         "t", append=True, batch_id="x1",
-        delete_keys=spark.createDataFrame([(2,)], "id int"), delete_on=["id"],
+        delete_sets=[(spark.createDataFrame([(2,)], "id int"), ["id"])],
     )
     rows = sorted((r["id"], r["v"]) for r in cat.read(spark, "t").collect())
     assert rows == [(1, "a"), (2, "b2"), (3, "c"), (4, "d")]
     cat.commit(
         spark.createDataFrame([(5, "e")], "id int, v string"),
         "t", append=True, batch_id="x2",
-        delete_keys=spark.createDataFrame([(1,), (4,)], "id int"),
-        delete_on=["id"],
+        delete_sets=[(spark.createDataFrame([(1,), (4,)], "id int"), ["id"])],
     )
     rows = sorted((r["id"], r["v"]) for r in cat.read(spark, "t").collect())
     assert rows == [(2, "b2"), (3, "c"), (5, "e")]
@@ -293,8 +293,6 @@ def test_link_mode_mismatch_raises(spark, tmp_path):
     built with; an incremental batch with a different --link-mode must
     raise instead of silently corrupting the touched-set computation
     (ADVICE r5)."""
-    import pytest
-
     wh = str(tmp_path / "wh_mode")
     all_pages = pages_df(spark, 16, seed=31, partitions=2)
     base = all_pages.where(F.col("url") < "https://s")
@@ -307,22 +305,41 @@ def test_link_mode_mismatch_raises(spark, tmp_path):
     incremental_add(spark, batch, wh, link_mode="parity")
 
 
-def test_partial_search_index_is_rebuilt(spark, tmp_path):
-    """A crash during the five-table index commit can leave a PARTIAL
-    index; the next incremental batch must detect it (all-five gate) and
-    rebuild wholesale instead of raising FileNotFoundError (ADVICE r5)."""
-    from kiwi_spark.plans.search_index import SEARCH_INDEX_TABLES, has_search_index
-
-    wh = str(tmp_path / "wh_partial")
+@pytest.fixture(scope="module")
+def indexed_base(spark, tmp_path_factory):
+    """(warehouse, base pages, batch pages): one indexed base build that
+    each case of the partial-index test copies instead of rebuilding."""
+    wh = str(tmp_path_factory.mktemp("indexed_base") / "wh")
     all_pages = pages_df(spark, 16, seed=37, partitions=2)
     base = all_pages.where(F.col("url") < "https://s")
     batch = all_pages.where(F.col("url") >= "https://s")
     run_pipeline(spark, base, wh, collect_lineage=False, build_search_index=True)
+    return wh, base, batch
+
+
+@pytest.mark.parametrize("op", ["add", "remove"])
+def test_partial_search_index_is_rebuilt(spark, tmp_path, indexed_base, op):
+    """A crash during the five-table index commit can leave a PARTIAL
+    index; the next incremental batch — an add or a removal, which share
+    the one index gate — must detect it (all-five gate) and rebuild
+    wholesale instead of raising FileNotFoundError (ADVICE r5)."""
+    import shutil
+
+    from kiwi_spark.plans.search_index import SEARCH_INDEX_TABLES, has_search_index
+
+    base_wh, base, batch = indexed_base
+    wh = str(tmp_path / "wh_partial")
+    shutil.copytree(base_wh, wh)
     cat = Catalog(wh)
     cat.drop("ivf_centroids")  # simulate the crash window
     assert not has_search_index(cat)
 
-    result = incremental_add(spark, batch, wh)
+    if op == "add":
+        result = incremental_add(spark, batch, wh)
+    else:
+        result = incremental_remove(
+            spark, base.select("url").orderBy("url").limit(2), wh
+        )
     assert "search_index" in result.stages_run
     assert has_search_index(cat)
     for table in SEARCH_INDEX_TABLES:
@@ -352,8 +369,7 @@ def test_partitioned_table_layout_lifecycle(spark, tmp_path):
     empty = spark.createDataFrame([], cat.table_schema(spark, "t"))
     cat.commit(
         empty, "t", append=True, batch_id="p2",
-        delete_keys=spark.createDataFrame([(3,), (25,)], "id int"),
-        delete_on=["id"],
+        delete_sets=[(spark.createDataFrame([(3,), (25,)], "id int"), ["id"])],
     )
     assert cat.read(spark, "t").count() == 28
 

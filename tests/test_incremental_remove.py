@@ -135,7 +135,7 @@ def test_remove_retry_idempotent_and_crash_safe(spark, tmp_path, monkeypatch):
     can no longer be recomputed from the live views — the persisted
     removal_sets table must carry the retry. Then a SECOND full retry
     must be a pure no-op."""
-    import kiwi_spark.operators.delta_remove as dr
+    import kiwi_spark.operators.delta_link as dl
 
     wh = str(tmp_path / "wh")
     wh_complement = str(tmp_path / "wh_c")
@@ -144,18 +144,18 @@ def test_remove_retry_idempotent_and_crash_safe(spark, tmp_path, monkeypatch):
     run_pipeline(spark, all_pages, wh, collect_lineage=False)
     run_pipeline(spark, keep, wh_complement, collect_lineage=False)
 
-    real = dr.materialize_nodes
+    real = dl.materialize_nodes
     calls = {"n": 0}
 
     def boom(*a, **k):
         calls["n"] += 1
         raise RuntimeError("injected crash before the nodes commit")
 
-    monkeypatch.setattr(dr, "materialize_nodes", boom)
+    monkeypatch.setattr(dl, "materialize_nodes", boom)
     with pytest.raises(RuntimeError, match="injected"):
         incremental_remove(spark, drop.select("url"), wh)
     assert calls["n"] == 1
-    monkeypatch.setattr(dr, "materialize_nodes", real)
+    monkeypatch.setattr(dl, "materialize_nodes", real)
 
     # epoch must NOT have advanced on the crashed attempt (same batch id)
     assert int(Catalog(wh).get_property("removal_epoch", 0)) == 0

@@ -243,32 +243,36 @@ def test_fold_member_select_group_limited_no_full_group_window(spark):
 
 
 def test_delta_copy_through_is_broadcast_anti_join(spark, tmp_path):
-    """Delta relink's copy-through (old canonical rows minus the touched
-    set) must be a broadcast LEFT ANTI join — a narrow scan+filter of the
+    """The delta paths' copy-through (old canonical rows minus the touched
+    set) happens when a merge-on-read table is read: ``Catalog.read``
+    anti-joins each equality-delete set against the older snapshots. That
+    join must be a broadcast LEFT ANTI join — a narrow scan+filter of the
     big side, never a shuffle of the warehouse (operators/delta_link.py
     shuffle-budget contract)."""
-    import pandas as pd
+    from kiwi_spark.sources.catalog import Catalog
 
-    # parquet-backed so the join sides carry size stats (createDataFrame
-    # never auto-broadcasts — ExistingRDD has no stats)
-    big_path = str(tmp_path / "big.parquet")
-    small_path = str(tmp_path / "small.parquet")
-    spark.createDataFrame(
-        [(f"e{i:06d}", f"N{i}") for i in range(5000)], "entity_id string, name string"
-    ).write.parquet(big_path)
-    spark.createDataFrame(
-        [(f"e{i:06d}",) for i in range(50)], "entity_id string"
-    ).write.parquet(small_path)
-
-    from kiwi_spark.operators.delta_link import _anti
-
-    plan = _simple_plan(
-        _anti(
-            spark.read.parquet(big_path),
-            spark.read.parquet(small_path),
-            "entity_id",
-        )
+    cat = Catalog(str(tmp_path / "wh_mor"))
+    schema = "entity_id string, name string"
+    cat.commit(
+        spark.createDataFrame(
+            [(f"e{i:06d}", f"N{i}") for i in range(5000)], schema
+        ),
+        "nodes",
     )
+    cat.commit(
+        spark.createDataFrame([("e000003", "N3b")], schema),
+        "nodes", append=True, batch_id="b1",
+        delete_sets=[(
+            spark.createDataFrame(
+                [(f"e{i:06d}",) for i in range(50)], "entity_id string"
+            ),
+            ["entity_id"],
+        )],
+    )
+
+    merged = cat.read(spark, "nodes")
+    assert merged.count() == 5000 - 50 + 1
+    plan = _simple_plan(merged)
     assert "LeftAnti" in plan
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
