@@ -437,9 +437,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             pages = pages_df(spark, 30, seed=42, partitions=4)
             keep = pages.where(F.col("url") < "https://r")
             drop = pages.where(F.col("url") >= "https://r")
-            run_pipeline(spark, pages, f"{root}/wh", collect_lineage=False)
+            run_pipeline(spark, pages, f"{root}/wh")
             incremental_remove(spark, drop.select("url"), f"{root}/wh")
-            run_pipeline(spark, keep, f"{root}/ref", collect_lineage=False)
+            run_pipeline(spark, keep, f"{root}/ref")
 
             def triples(wh):
                 cat = Catalog(wh)

@@ -153,7 +153,7 @@ def main() -> int:
         result.stages_run = ["stream_ingest"]
         for table in ("nodes", "edges", "mentions"):
             if cat.exists(table):
-                result.counts[table] = cat.read(spark, table).count()
+                result.counts[table] = cat.row_count(spark, table)
     elif args.remove:
         from kiwi_spark.pipeline import incremental_remove
 

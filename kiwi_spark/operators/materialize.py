@@ -1,4 +1,4 @@
-"""Stage 5: materialize nodes/edges/mentions + lineage/metrics.
+"""Stage 5: materialize nodes/edges/mentions.
 
 * entity-hash bucketing: outputs carry a bucket column
   ``bucket = pmod(xxhash64(id), n_buckets)`` and are repartitioned by it,
@@ -10,9 +10,6 @@
 * deterministic embeddings (L13 substitute): hashing-TF of the description
   into a 64-dim float array via one Arrow-vectorized pandas UDF — used by
   query-side ranking (plans.queries) and similarity ops.
-* lineage/metrics: one row per output partition per stage
-  (stage, partition_id, row_count, url_count) + wall time, appended to the
-  ``lineage`` table (north_star: "per-partition lineage and metrics rows").
 """
 
 from __future__ import annotations
@@ -72,31 +69,6 @@ def compact_key_col(name_col: str = "name"):
     return F.upper(
         F.regexp_replace(
             F.regexp_replace(F.col(name_col), "&", " AND "), r"[^\p{L}\p{N}]+", ""
-        )
-    )
-
-
-def lineage_rows(df: DataFrame, stage: str, wall_seconds: float,
-                 snapshot_id: int | None = None) -> DataFrame:
-    """Per-partition lineage: computed over the stage output itself."""
-    url_col = "url" if "url" in df.columns else None
-    agg = [F.count("*").alias("row_count")]
-    agg.append(
-        (F.countDistinct(url_col) if url_col else F.lit(None).cast("long")).alias(
-            "url_count"
-        )
-    )
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(*agg)
-        .select(
-            F.lit(stage).alias("stage"),
-            "partition_id",
-            "row_count",
-            "url_count",
-            F.lit(round(wall_seconds, 3)).alias("stage_wall_seconds"),
-            F.lit(snapshot_id).cast("long").alias("snapshot_id"),
-            F.current_timestamp().alias("created_at"),
         )
     )
 

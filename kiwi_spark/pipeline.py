@@ -34,14 +34,11 @@ from .operators.build_graph import (
 from .operators.extract_text import extract_text
 from .operators.link import canonicalize, entity_id_map
 from .operators.materialize import (
-    lineage_rows,
     materialize_edges,
     materialize_mentions,
     materialize_nodes,
 )
 from .sources.catalog import Catalog
-
-STAGES = ["text", "raw_graph", "views", "id_map", "graph", "lineage"]
 
 
 def _single_writer(fn):
@@ -113,7 +110,9 @@ def _commit_search_index(cat: Catalog, spark: SparkSession) -> None:
         ],
     )
     # reference point for the centroid-drift trigger (maybe_retrain_ivf)
-    record_ivf_training(cat, nodes_m.count(), edges_m.count())
+    record_ivf_training(
+        cat, cat.row_count(spark, "entity_ivf"), cat.row_count(spark, "edge_ivf")
+    )
 
 
 def _commit_id_map(cat: Catalog, nodes_doc: DataFrame, link_mode: str) -> None:
@@ -171,12 +170,10 @@ def run_pipeline(
     link_mode: str = "parity",
     n_buckets: int = 32,
     resume: bool = False,
-    collect_lineage: bool = True,
     build_search_index: bool = False,
 ) -> PipelineResult:
     cat = Catalog(warehouse)
     result = PipelineResult(warehouse=warehouse)
-    lineage_batches: list[DataFrame] = []
 
     def stage(name: str, build, committed_tables: list[str]):
         if resume and all(cat.exists(t) for t in committed_tables):
@@ -255,31 +252,9 @@ def run_pipeline(
             SEARCH_INDEX_TABLES,
         )
 
-    # 6. lineage/metrics
-    if collect_lineage:
-        def _lineage():
-            batches = lineage_batches or []
-            stage_of = {"text": "text", "nodes": "graph", "edges": "graph", "mentions": "graph"}
-            for table in ("text", "nodes", "edges", "mentions"):
-                snap = cat.current_snapshot(table)
-                batches.append(
-                    lineage_rows(
-                        cat.read(spark, table),
-                        table,
-                        result.timings.get(stage_of[table], 0.0),
-                        snapshot_id=snap["id"] if snap else None,
-                    )
-                )
-            df = batches[0]
-            for extra in batches[1:]:
-                df = df.unionByName(extra)
-            cat.commit(df, "lineage", stage="metrics")
-
-        stage("lineage", _lineage, ["lineage"])
-
     for table in ("nodes", "edges", "mentions"):
         if cat.exists(table):
-            result.counts[table] = cat.read(spark, table).count()
+            result.counts[table] = cat.row_count(spark, table)
     return result
 
 
@@ -456,7 +431,7 @@ def incremental_add(
     _auto_compact(spark, cat, result, compact_appends_after)
 
     for table in ("nodes", "edges", "mentions"):
-        result.counts[table] = cat.read(spark, table).count()
+        result.counts[table] = cat.row_count(spark, table)
     _maybe_retrain_ivf(spark, cat, result)
     return result
 
@@ -616,7 +591,7 @@ def incremental_remove(
             result.counts["touched_doc_edges"] = 0
             result.stages_run = ["delta_remove"]
             for table in ("nodes", "edges", "mentions"):
-                result.counts[table] = cat.read(spark, table).count()
+                result.counts[table] = cat.row_count(spark, table)
             return result
 
     started = time.time()
@@ -639,7 +614,7 @@ def incremental_remove(
     _auto_compact(spark, cat, result, compact_appends_after)
 
     for table in ("nodes", "edges", "mentions"):
-        result.counts[table] = cat.read(spark, table).count()
+        result.counts[table] = cat.row_count(spark, table)
     _maybe_retrain_ivf(spark, cat, result)
 
     # the removal's decision sets are dead once the epoch advanced (only

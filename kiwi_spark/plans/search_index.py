@@ -316,7 +316,7 @@ def build_entity_search_index(nodes: DataFrame, n_cells: int = 16,
 
     posting = build_trigram_index(nodes, "entity_id", {"name": "name"})
     assigned, centroids = ivf_build(
-        nodes, n_cells=min(n_cells, max(1, nodes.count())), seed=seed,
+        nodes, n_cells=n_cells, seed=seed,
         id_col="entity_id", vec_col="embedding",
     )
     return posting, assigned, centroids
@@ -335,7 +335,7 @@ def build_relationship_search_index(edges: DataFrame, nodes: DataFrame,
          "dst_name": "dst_name"},
     )
     assigned, centroids = ivf_build(
-        edges, n_cells=min(n_cells, max(1, edges.count())), seed=seed,
+        edges, n_cells=n_cells, seed=seed,
         id_col="edge_id", vec_col="embedding",
     )
     return posting, assigned, centroids
@@ -396,7 +396,7 @@ def maybe_retrain_ivf(spark, cat, threshold: float = IVF_DRIFT_THRESHOLD,
         if live_counts is not None and kind in live_counts:
             cur = int(live_counts[kind])
         else:
-            cur = cat.read(spark, ivf_table).count()
+            cur = cat.row_count(spark, ivf_table)
         counts[kind] = cur
         t = int(trained.get(kind, 0))
         if cur == 0:
@@ -419,7 +419,7 @@ def maybe_retrain_ivf(spark, cat, threshold: float = IVF_DRIFT_THRESHOLD,
         ivf_table, src_table, id_col = plans[kind]
         src = cat.read(spark, src_table)
         assigned, cents = ivf_build(
-            src, n_cells=min(n_cells, max(1, counts[kind] or 1)), seed=seed,
+            src, n_cells=n_cells, seed=seed,
             id_col=id_col, vec_col="embedding",
         )
         cat.commit(

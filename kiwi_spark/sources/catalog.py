@@ -7,12 +7,15 @@ The sandbox has no Iceberg runtime jar, so this module implements the same
 contract on plain parquet:
 
     <warehouse>/<table>/snap-<n>/   immutable parquet data
-    <warehouse>/<table>/MANIFEST.json  {current, snapshots[], stage, rows}
+    <warehouse>/<table>/MANIFEST.json  {current, snapshots[]}, a snapshot
+        {id, stage, dirs, deletes, partitions: [[partition_id, rows, bytes]]}
 
 Mapping to Iceberg in production: ``commit`` ≡ table.newAppend/replace
 snapshot commit; ``MANIFEST.json`` ≡ the catalog pointer; readers always go
 through the manifest so a half-written snap-<n> directory is never visible
 (write-then-flip, same isolation Iceberg gives via metadata swap).
+``partitions`` ≡ Iceberg's per-data-file ``record_count``, read from the
+commit's own parquet footers, so ``row_count`` and ``lineage`` need no job.
 
 Everything is driver-side metadata only — data paths are read/written by
 Spark executors as ordinary parquet (predicate pushdown and column pruning
@@ -25,6 +28,8 @@ import json
 import os
 import shutil
 import time
+
+import pyarrow.parquet as pq
 
 
 class Catalog:
@@ -200,24 +205,20 @@ class Catalog:
             clustered.write.mode("overwrite").partitionBy(*layout).parquet(out)
         else:
             df.write.mode("overwrite").parquet(out)
+        new_deletes = []
         for i, (keys_df, cols) in enumerate(delete_sets):
-            suffix = f"-deletes{i if i else ''}"
+            delete_dir = f"{snap_dir}-deletes{i if i else ''}"
             keys_df.select(*cols).write.mode("overwrite").parquet(
-                os.path.join(self.warehouse, table, snap_dir + suffix)
+                os.path.join(self.warehouse, table, delete_dir)
             )
-        dirs = [snap_dir]
-        deletes = []
+            new_deletes.append({"dir": delete_dir, "on": list(cols), "seq": next_id})
+        dirs, deletes = [snap_dir], new_deletes
         if append and manifest["current"] is not None:
             prev = next(
                 s for s in manifest["snapshots"] if s["id"] == manifest["current"]
             )
             dirs = (prev.get("dirs") or [prev["dir"]]) + [snap_dir]
-            deletes = list(prev.get("deletes") or [])
-        for i, (_keys_df, cols) in enumerate(delete_sets):
-            suffix = f"-deletes{i if i else ''}"
-            deletes.append(
-                {"dir": snap_dir + suffix, "on": list(cols), "seq": next_id}
-            )
+            deletes = list(prev.get("deletes") or []) + new_deletes
         snap = {
             "id": next_id,
             "dir": snap_dir,
@@ -225,6 +226,7 @@ class Catalog:
             "stage": stage or table,
             "committed_at": time.time(),
             "write_seconds": round(time.time() - started, 3),
+            "partitions": self._written_partitions(out),
         }
         if deletes:
             snap["deletes"] = deletes
@@ -241,15 +243,63 @@ class Catalog:
         os.replace(tmp, self._manifest_path(table))  # atomic flip
         return snap
 
+    @staticmethod
+    def _written_partitions(path: str) -> list[list[int]]:
+        """[[partition_id, rows, bytes], ...] of a snapshot dir, from its
+        parquet footers (driver-side, no Spark job). partition_id is the
+        write task's id in the ``part-NNNNN`` file name; a hive-partitioned
+        dir holds one file per task and value, summed per task."""
+        sizes: dict[int, list[int]] = {}
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                if f.startswith("part-") and f.endswith(".parquet"):
+                    full = os.path.join(root, f)
+                    acc = sizes.setdefault(int(f.split("-")[1]), [0, 0])
+                    acc[0] += pq.read_metadata(full).num_rows
+                    acc[1] += os.path.getsize(full)
+        return [[pid, rows, nbytes] for pid, (rows, nbytes) in sorted(sizes.items())]
+
+    def row_count(self, spark, table: str) -> int:
+        """Live rows, summed from the ``partitions`` of the live dirs — no
+        Spark job. Counts the merged read only when the manifest cannot
+        answer: the snapshot has equality deletes, or a dir has no sizes."""
+        snap = self.current_snapshot(table)
+        if snap is None:
+            raise FileNotFoundError(f"no committed snapshot for table {table!r}")
+        sizes = {
+            s["dir"]: s.get("partitions")
+            for s in self._read_manifest(table)["snapshots"]
+        }
+        live = [sizes[d] for d in (snap.get("dirs") or [snap["dir"]])]
+        if snap.get("deletes") or any(parts is None for parts in live):
+            return self.read(spark, table).count()
+        return sum(rows for parts in live for _pid, rows, _bytes in parts)
+
+    def lineage(self) -> list[dict]:
+        """One row per (table, snapshot, write partition) over every commit
+        of every table, read from the manifests — no Spark job."""
+        return [
+            {
+                "table": table,
+                "stage": s["stage"],
+                "snapshot_id": s["id"],
+                "partition_id": pid,
+                "row_count": rows,
+                "bytes": nbytes,
+                "write_seconds": s["write_seconds"],
+                "committed_at": s["committed_at"],
+            }
+            for table in self.tables()
+            for s in self._read_manifest(table)["snapshots"]
+            for pid, rows, nbytes in s.get("partitions") or []
+        ]
+
     def batch_appended(self, table: str, batch_id: str) -> bool:
         """True iff a snapshot tagged with batch_id is part of the CURRENT
         snapshot's data-dir chain (i.e. the batch's rows are live)."""
-        manifest = self._read_manifest(table)
-        if not manifest or manifest.get("current") is None:
+        cur = self.current_snapshot(table)
+        if cur is None:
             return False
-        cur = next(
-            s for s in manifest["snapshots"] if s["id"] == manifest["current"]
-        )
         live = set(cur.get("dirs") or [cur["dir"]])
         return any(
             s["dir"] in live
@@ -257,7 +307,7 @@ class Catalog:
                 s.get("batch_id") == batch_id
                 or batch_id in (s.get("batch_ids") or [])
             )
-            for s in manifest["snapshots"]
+            for s in self._read_manifest(table)["snapshots"]
         )
 
     def batch_paths(self, table: str, batch_id: str) -> list[str]:

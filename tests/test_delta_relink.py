@@ -47,8 +47,8 @@ def test_multi_batch_delta_equals_full_run_fuzzy(spark, tmp_path):
     a, b, c = _split3(all_pages)
     assert a.count() > 5 and b.count() > 5 and c.count() > 5
 
-    run_pipeline(spark, all_pages, wh_full, link_mode="fuzzy", collect_lineage=False)
-    run_pipeline(spark, a, wh_incr, link_mode="fuzzy", collect_lineage=False)
+    run_pipeline(spark, all_pages, wh_full, link_mode="fuzzy")
+    run_pipeline(spark, a, wh_incr, link_mode="fuzzy")
     r1 = incremental_add(spark, b, wh_incr, link_mode="fuzzy")
     assert "delta_relink" in r1.stages_run
     r2 = incremental_add(spark, c, wh_incr, link_mode="fuzzy")
@@ -68,7 +68,7 @@ def test_touched_set_exact_parity(spark, tmp_path):
     all_pages = pages_df(spark, 40, seed=5, partitions=4)
     base = all_pages.where(F.col("url") < "https://s")
     batch = all_pages.where(F.col("url") >= "https://s")
-    run_pipeline(spark, base, wh, collect_lineage=False)
+    run_pipeline(spark, base, wh)
     cat = Catalog(wh)
 
     old_link_keys = cat.read(spark, "link_keys").collect()
@@ -127,7 +127,7 @@ def test_index_commit_is_bounded_mor(spark, tmp_path):
     all_pages = pages_df(spark, 40, seed=7, partitions=4)
     base = all_pages.where(F.col("url") < "https://s")
     batch = all_pages.where(F.col("url") >= "https://s")
-    run_pipeline(spark, base, wh, collect_lineage=False, build_search_index=True)
+    run_pipeline(spark, base, wh, build_search_index=True)
     cat = Catalog(wh)
     before_rows = cat.read(spark, "entity_trigrams").count()
     before_snap = cat.current_snapshot("entity_trigrams")
@@ -169,8 +169,8 @@ def test_incremental_retry_is_idempotent(spark, tmp_path):
     base = all_pages.where(F.col("url") < "https://s")
     batch = all_pages.where(F.col("url") >= "https://s")
 
-    run_pipeline(spark, all_pages, wh_full, collect_lineage=False)
-    run_pipeline(spark, base, wh, collect_lineage=False, build_search_index=True)
+    run_pipeline(spark, all_pages, wh_full)
+    run_pipeline(spark, base, wh, build_search_index=True)
     incremental_add(spark, batch, wh)
     sig1 = _graph_signature(spark, wh)
     idx1 = sorted(
@@ -236,8 +236,8 @@ def test_append_chain_compaction(spark, tmp_path):
     ]
     assert sum(s.count() for s in splits) == 40
 
-    run_pipeline(spark, all_pages, wh_full, collect_lineage=False)
-    run_pipeline(spark, splits[0], wh, collect_lineage=False)
+    run_pipeline(spark, all_pages, wh_full)
+    run_pipeline(spark, splits[0], wh)
     results = [
         incremental_add(spark, part, wh, compact_appends_after=3)
         for part in splits[1:]
@@ -264,7 +264,7 @@ def test_graph_table_commits_are_bounded_mor(spark, tmp_path):
     all_pages = pages_df(spark, 40, seed=23, partitions=4)
     base = all_pages.where(F.col("url") < "https://s")
     batch = all_pages.where(F.col("url") >= "https://s")
-    run_pipeline(spark, base, wh, collect_lineage=False)
+    run_pipeline(spark, base, wh)
     cat = Catalog(wh)
     before = {t: cat.current_snapshot(t) for t in ("nodes", "edges", "mentions", "id_map")}
 
@@ -297,7 +297,7 @@ def test_link_mode_mismatch_raises(spark, tmp_path):
     all_pages = pages_df(spark, 16, seed=31, partitions=2)
     base = all_pages.where(F.col("url") < "https://s")
     batch = all_pages.where(F.col("url") >= "https://s")
-    run_pipeline(spark, base, wh, link_mode="parity", collect_lineage=False)
+    run_pipeline(spark, base, wh, link_mode="parity")
     assert Catalog(wh).get_property("link_mode") == "parity"
     with pytest.raises(ValueError, match="link_mode"):
         incremental_add(spark, batch, wh, link_mode="fuzzy")
@@ -313,7 +313,7 @@ def indexed_base(spark, tmp_path_factory):
     all_pages = pages_df(spark, 16, seed=37, partitions=2)
     base = all_pages.where(F.col("url") < "https://s")
     batch = all_pages.where(F.col("url") >= "https://s")
-    run_pipeline(spark, base, wh, collect_lineage=False, build_search_index=True)
+    run_pipeline(spark, base, wh, build_search_index=True)
     return wh, base, batch
 
 
@@ -399,7 +399,7 @@ def test_delta_scans_prune_touched_buckets(spark, tmp_path):
 
     wh = str(tmp_path / "wh_prune")
     pages = pages_df(spark, 40, seed=71, partitions=4)
-    run_pipeline(spark, pages, wh, collect_lineage=False)
+    run_pipeline(spark, pages, wh)
     cat = Catalog(wh)
     n_buckets = int(cat.get_property("doc_view_buckets"))
     assert n_buckets > 0

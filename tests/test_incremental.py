@@ -34,8 +34,8 @@ def test_incremental_equals_full_run(spark, tmp_path):
     n_first, n_rest = first.count(), rest.count()
     assert n_first > 5 and n_rest > 5 and n_first + n_rest == 50
 
-    run_pipeline(spark, all_pages, wh_full, collect_lineage=False)
-    run_pipeline(spark, first, wh_incr, collect_lineage=False)
+    run_pipeline(spark, all_pages, wh_full)
+    run_pipeline(spark, first, wh_incr)
     result = incremental_add(spark, rest, wh_incr)
     assert result.counts["nodes"] > 0
 
@@ -83,7 +83,7 @@ def test_stream_ingest_folds_arriving_files(spark, tmp_path):
     stream_ingest(spark, pages_dir, wh, ckpt, max_files_per_batch=1)
 
     run_pipeline(
-        spark, first.unionByName(second), wh_ref, collect_lineage=False
+        spark, first.unionByName(second), wh_ref
     )
     ref = Catalog(wh_ref)
     got = {
@@ -117,7 +117,7 @@ def test_add_of_existing_urls_raises(spark, tmp_path):
 
     wh = str(tmp_path / "wh")
     pages = pages_df(spark, 12, seed=93, partitions=2)
-    run_pipeline(spark, pages, wh, collect_lineage=False)
+    run_pipeline(spark, pages, wh)
 
     overlapping = pages.limit(4)
     with pytest.raises(ValueError, match="already exist"):
@@ -173,7 +173,7 @@ def test_stream_ingest_reupload_updates_in_place(spark, tmp_path):
     redelivered.coalesce(1).write.mode("append").parquet(pages_dir)
     stream_ingest(spark, pages_dir, wh, ckpt)
 
-    run_pipeline(spark, redelivered, wh_ref, collect_lineage=False)
+    run_pipeline(spark, redelivered, wh_ref)
     cat, ref = Catalog(wh), Catalog(wh_ref)
     got = {
         (r["entity_id"], r["name"], r["n_sources"], r["description"])
@@ -199,7 +199,7 @@ def test_changed_content_same_urls_rejected_not_skipped(spark, tmp_path):
     wh = str(tmp_path / "wh")
     base = pages_df(spark, 10, seed=97, partitions=2)
     batch = pages_df(spark, 6, seed=97, partitions=2, start=10)
-    run_pipeline(spark, base, wh, collect_lineage=False)
+    run_pipeline(spark, base, wh)
     # keyword-style call must work through the lock wrapper
     incremental_add(spark, new_pages=batch, warehouse=wh)
 

@@ -47,8 +47,8 @@ def test_remove_equals_complement_build_parity(spark, tmp_path):
     keep, drop = _split(all_pages)
     assert keep.count() > 5 and drop.count() > 5
 
-    run_pipeline(spark, all_pages, wh, collect_lineage=False)
-    run_pipeline(spark, keep, wh_complement, collect_lineage=False)
+    run_pipeline(spark, all_pages, wh)
+    run_pipeline(spark, keep, wh_complement)
     cat = Catalog(wh)
     nodes_before = {
         r["entity_id"]: r["description"]
@@ -112,6 +112,9 @@ def test_remove_equals_complement_build_parity(spark, tmp_path):
         assert snap["id"] != before_snaps[table]["id"]
         assert before_snaps[table]["dir"] in snap["dirs"], table
         assert snap.get("deletes"), table
+        # merge-on-read tables carry deletes: row_count must count the
+        # merged read, not sum the recorded partition sizes
+        assert cat.row_count(spark, table) == cat.read(spark, table).count()
 
 
 def test_remove_equals_complement_build_fuzzy(spark, tmp_path):
@@ -122,8 +125,8 @@ def test_remove_equals_complement_build_fuzzy(spark, tmp_path):
     wh_complement = str(tmp_path / "wh_c")
     all_pages = pages_df(spark, 36, seed=43, partitions=4)
     keep, drop = _split(all_pages)
-    run_pipeline(spark, all_pages, wh, link_mode="fuzzy", collect_lineage=False)
-    run_pipeline(spark, keep, wh_complement, link_mode="fuzzy", collect_lineage=False)
+    run_pipeline(spark, all_pages, wh, link_mode="fuzzy")
+    run_pipeline(spark, keep, wh_complement, link_mode="fuzzy")
 
     incremental_remove(spark, drop.select("url"), wh, link_mode="fuzzy")
     assert _graph_signature(spark, wh) == _graph_signature(spark, wh_complement)
@@ -141,8 +144,8 @@ def test_remove_retry_idempotent_and_crash_safe(spark, tmp_path, monkeypatch):
     wh_complement = str(tmp_path / "wh_c")
     all_pages = pages_df(spark, 32, seed=47, partitions=4)
     keep, drop = _split(all_pages)
-    run_pipeline(spark, all_pages, wh, collect_lineage=False)
-    run_pipeline(spark, keep, wh_complement, collect_lineage=False)
+    run_pipeline(spark, all_pages, wh)
+    run_pipeline(spark, keep, wh_complement)
 
     real = dl.materialize_nodes
     calls = {"n": 0}
@@ -184,8 +187,8 @@ def test_remove_then_readd_roundtrip(spark, tmp_path):
     wh_full = str(tmp_path / "wh_f")
     all_pages = pages_df(spark, 32, seed=53, partitions=4)
     keep, drop = _split(all_pages)
-    run_pipeline(spark, all_pages, wh, collect_lineage=False)
-    run_pipeline(spark, all_pages, wh_full, collect_lineage=False)
+    run_pipeline(spark, all_pages, wh)
+    run_pipeline(spark, all_pages, wh_full)
 
     incremental_remove(spark, drop.select("url"), wh)
     result = incremental_add(spark, drop, wh)
@@ -198,7 +201,7 @@ def test_remove_everything_and_unknown_urls(spark, tmp_path):
     warehouse never saw is a graceful no-op (delete-file.ts:30-32)."""
     wh = str(tmp_path / "wh")
     pages = pages_df(spark, 16, seed=59, partitions=2)
-    run_pipeline(spark, pages, wh, collect_lineage=False)
+    run_pipeline(spark, pages, wh)
     cat = Catalog(wh)
     counts_before = {t: cat.read(spark, t).count() for t in ("nodes", "edges")}
 
@@ -226,7 +229,7 @@ def test_remove_maintains_search_index(spark, tmp_path):
     wh = str(tmp_path / "wh")
     all_pages = pages_df(spark, 32, seed=61, partitions=4)
     keep, drop = _split(all_pages)
-    run_pipeline(spark, all_pages, wh, collect_lineage=False, build_search_index=True)
+    run_pipeline(spark, all_pages, wh, build_search_index=True)
     cat = Catalog(wh)
 
     result = incremental_remove(spark, drop.select("url"), wh)
@@ -257,7 +260,7 @@ def test_remove_everything_on_indexed_warehouse(spark, tmp_path):
 
     wh = str(tmp_path / "wh")
     pages = pages_df(spark, 14, seed=73, partitions=2)
-    run_pipeline(spark, pages, wh, collect_lineage=False, build_search_index=True)
+    run_pipeline(spark, pages, wh, build_search_index=True)
     cat = Catalog(wh)
 
     # aggressive compaction so the emptied tables get rewritten too
@@ -285,7 +288,7 @@ def test_remove_everything_on_indexed_warehouse(spark, tmp_path):
     result = incremental_add(spark, pages, wh)
     assert result.counts["nodes"] > 0
     wh_ref = str(tmp_path / "ref")
-    run_pipeline(spark, pages, wh_ref, collect_lineage=False)
+    run_pipeline(spark, pages, wh_ref)
     assert _graph_signature(spark, wh) == _graph_signature(spark, wh_ref)
 
 
@@ -300,7 +303,7 @@ def test_pre_epoch_batch_retry_not_double_appended(spark, tmp_path):
     all_pages = pages_df(spark, 24, seed=79, partitions=2)
     base = all_pages.where(F.col("url") < "https://s")
     batch = all_pages.where(F.col("url") >= "https://s")
-    run_pipeline(spark, base, wh, collect_lineage=False)
+    run_pipeline(spark, base, wh)
     incremental_add(spark, batch, wh)
     cat = Catalog(wh)
     sig = _graph_signature(spark, wh)
@@ -360,13 +363,13 @@ def test_incremental_update_replaces_content(spark, tmp_path):
     )
     updated = updated.localCheckpoint(eager=True)
 
-    run_pipeline(spark, all_pages, wh, collect_lineage=False)
+    run_pipeline(spark, all_pages, wh)
     result = incremental_update(spark, updated, wh)
     assert "delta_remove" in result.stages_run
     assert "delta_relink" in result.stages_run
 
     run_pipeline(
-        spark, keep.unionByName(updated), wh_ref, collect_lineage=False
+        spark, keep.unionByName(updated), wh_ref
     )
     assert _graph_signature(spark, wh) == _graph_signature(spark, wh_ref)
 
@@ -378,7 +381,7 @@ def test_mutation_lock_serializes_writers(spark, tmp_path):
     for Iceberg's commit-conflict detection)."""
     wh = str(tmp_path / "wh")
     pages = pages_df(spark, 8, seed=89, partitions=2)
-    run_pipeline(spark, pages, wh, collect_lineage=False)
+    run_pipeline(spark, pages, wh)
     cat = Catalog(wh)
     batch = pages_df(spark, 4, seed=89, partitions=2, start=8)
     with cat.mutation_lock():

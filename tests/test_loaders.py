@@ -318,7 +318,7 @@ def test_pipeline_ingests_mixed_formats(spark, tmp_path):
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     )
     wh = str(tmp_path / "wh_mixed")
-    run_pipeline(spark, pages, wh, collect_lineage=False)
+    run_pipeline(spark, pages, wh)
     cat = Catalog(wh)
     text = {r["url"]: r for r in cat.read(spark, "text").collect()}
     assert text["https://x.test/a.ics"]["file_type"] == "calendar"

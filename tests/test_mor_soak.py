@@ -65,7 +65,7 @@ def test_mor_warehouse_soak(spark, tmp_path, monkeypatch):
         )
 
     run_pipeline(
-        spark, batch(0), wh, collect_lineage=False,
+        spark, batch(0), wh,
     )
     cat = Catalog(wh)
     live = {0}
@@ -129,7 +129,7 @@ def test_mor_warehouse_soak(spark, tmp_path, monkeypatch):
     net = all_live.where(~F.col("url").isin(sorted(removed_urls)))
 
     wh_ref = str(tmp_path / "wh_ref")
-    run_pipeline(spark, net, wh_ref, collect_lineage=False)
+    run_pipeline(spark, net, wh_ref)
     assert _graph_signature(spark, wh) == _graph_signature(spark, wh_ref)
 
     # bounded read amplification: the nodes read never fans past

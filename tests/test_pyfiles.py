@@ -45,7 +45,7 @@ def test_pipeline_runs_from_pyfiles_zip(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     result = json.loads(proc.stdout.strip().splitlines()[-1])
     assert set(result["stages_run"]) == {
-        "text", "raw_graph", "views", "id_map", "graph", "lineage"
+        "text", "raw_graph", "views", "id_map", "graph"
     }
     assert result["counts"]["nodes"] > 0
     assert result["counts"]["edges"] > 0

@@ -16,8 +16,7 @@ SEED = 11
 @pytest.fixture(scope="module")
 def graph(spark, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("whq"))
-    run_pipeline(spark, pages_df(spark, N_PAGES, seed=SEED, partitions=4), wh,
-                 collect_lineage=False)
+    run_pipeline(spark, pages_df(spark, N_PAGES, seed=SEED, partitions=4), wh)
     cat = Catalog(wh)
     return {
         "warehouse": wh,

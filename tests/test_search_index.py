@@ -284,7 +284,7 @@ def test_auto_routing_parity_and_fallback(spark, tmp_path):
     wh = str(tmp_path / "wh_auto")
     run_pipeline(
         spark, pages_df(spark, 30, seed=9, partitions=4), wh,
-        collect_lineage=False, build_search_index=True,
+        build_search_index=True,
     )
     cat = Catalog(wh)
     assert has_search_index(cat)
@@ -465,7 +465,7 @@ def test_incremental_growth_triggers_retrain(spark, tmp_path):
     wh = str(tmp_path / "wh_grow")
     base = pages_df(spark, 10, seed=67, partitions=2)
     batch = pages_df(spark, 30, seed=67, partitions=2, start=10)
-    run_pipeline(spark, base, wh, collect_lineage=False, build_search_index=True)
+    run_pipeline(spark, base, wh, build_search_index=True)
     cat = Catalog(wh)
     cat.set_property("ivf_drift_threshold", 0.1)  # the operational knob
     trained_before = dict(cat.get_property("ivf_trained_rows"))
