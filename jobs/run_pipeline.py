@@ -38,7 +38,7 @@ def main() -> int:
     parser.add_argument(
         "--search-index", action="store_true",
         help="also materialize the ranked-search index tables "
-             "(entity/edge trigram postings + IVF cells)",
+             "(entity/edge trigram postings)",
     )
     parser.add_argument(
         "--incremental", action="store_true",

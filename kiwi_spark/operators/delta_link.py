@@ -67,13 +67,13 @@ O(new + touched) rows; the only O(total) work is (a) narrow semi/anti
 join filter scans of the doc-level views and old canonical tables (no
 shuffle of the big side — the touched side broadcasts under AQE) and
 (b) narrow merge-on-read anti-joins at read time. ALL mutated tables —
-id_map, nodes, edges, mentions and the five search-index tables — are
+id_map, nodes, edges, mentions and the two trigram posting tables — are
 updated with merge-on-read equality-delete commits (sources.catalog):
 the written bytes per batch are O(touched), the masked old rows stay in
 earlier snapshots and drop out during reads via broadcast anti-joins on
 the closure-property-2 predicates, and the auto-compaction in
 ``incremental_add`` periodically rewrites each table to restore bucket
-clustering and bound the delete chain — the GIN/DiskANN per-row update
+clustering and bound the delete chain — the GIN per-row update
 analog, with Iceberg rewrite-data-files as the maintenance story.
 """
 
@@ -293,8 +293,8 @@ def maintain_search_index(
     timings: dict,
 ) -> None:
     """Bring the ranked-search index up to date after ``apply_touched``.
-    Gate on ALL five index tables (ADVICE r5): a crash during the parallel
-    five-table commit can leave e.g. ivf_centroids missing, and the delta
+    Gate on BOTH posting tables (ADVICE r5): a crash during the parallel
+    two-table commit can leave e.g. edge_trigrams missing, and the delta
     maintenance would FileNotFoundError — a partial index is instead
     rebuilt wholesale (which also repairs the crash)."""
     import time as _time
@@ -405,28 +405,20 @@ def delta_search_index(
     batch_id: str,
     edge_index_mask: DataFrame,
 ) -> None:
-    """Maintain the 5 ranked-search index tables with O(touched)
+    """Maintain the two trigram posting tables with O(touched)
     merge-on-read commits instead of a full rebuild (VERDICT r4 #2 — the
-    reference's GIN/DiskANN indexes update per row, graph.ts:227-228).
+    reference's GIN index updates per row, graph.ts:227-228).
 
-    Deletions follow closure property (2): a stale index row's id is a
+    Deletions follow closure property (2): a stale posting row's id is a
     canonical id of an affected group, i.e. ∈ E_t (entities) or an edge
     with an endpoint ∈ E_t (relationships). Additions are rebuilt from
-    the just-committed delta rows only. IVF centroids stay frozen per
-    batch — new vectors are assigned to the existing cells, exactly how a
-    DiskANN/IVF index absorbs inserts; query exactness is unaffected
-    because the default nprobe probes every cell (plans.search_index) —
-    but once the cumulative row churn crosses IVF_DRIFT_THRESHOLD, the
-    drifted leg's cells are RETRAINED from the live table
-    (plans.search_index.maybe_retrain_ivf, round 6), keeping partial-probe
-    recall from decaying under sustained ingestion. A delete chain longer
-    than INDEX_COMPACT_AFTER triggers compaction (the Iceberg
+    the just-committed delta rows only. A delete chain longer than
+    INDEX_COMPACT_AFTER triggers compaction (the Iceberg
     rewrite-data-files analog)."""
-    import numpy as np
-
-    from ..plans.search_index import build_trigram_index, load_centroids
-    from .similarity import _assign_cells
-    from ..plans.queries import _edges_with_names
+    from ..plans.search_index import (
+        build_entity_search_index,
+        build_relationship_search_index,
+    )
 
     nodes_now = cat.read(spark, "nodes")
     edges_now = cat.read(spark, "edges")
@@ -442,7 +434,6 @@ def delta_search_index(
         )
     ).dropDuplicates(["edge_id"]).localCheckpoint(eager=False)
 
-    ent_del = e_t.select(F.col("entity_id").alias("id"))
     # edge ids to mask: computed by the caller from the PRE-relink edges
     # snapshot (ids with a touched endpoint — including dissolved groups —
     # plus the delta re-add ids). On a crash-retry where the relink
@@ -450,54 +441,25 @@ def delta_search_index(
     # rows are harmless (candidates re-join the edges table at query time,
     # so dead ids drop out) and are masked by the same-id re-add rule if
     # the pair ever reappears.
-    edge_del = edge_index_mask
-
-    ent_posting = build_trigram_index(nodes_delta, "entity_id", {"name": "name"})
-    named = _edges_with_names(edges_delta, nodes_now)
-    edge_posting = build_trigram_index(
-        named,
-        "edge_id",
-        {"description": "description", "src_name": "src_name",
-         "dst_name": "dst_name"},
-    )
-
-    cents_df = cat.read(spark, "ivf_centroids")
-    e_cents = np.asarray(load_centroids(cents_df, "entity"), dtype=np.float64)
-    r_cents = np.asarray(load_centroids(cents_df, "edge"), dtype=np.float64)
-    ent_asg = _assign_cells(nodes_delta, e_cents, "embedding").select(
-        F.col("entity_id").alias("vec_id"), "embedding", "cell"
-    )
-    edge_asg = _assign_cells(edges_delta, r_cents, "embedding").select(
-        F.col("edge_id").alias("vec_id"), "embedding", "cell"
-    )
-
     jobs = [
-        (ent_posting, "entity_trigrams", ent_del, ["id"]),
-        (edge_posting, "edge_trigrams", edge_del, ["id"]),
         (
-            ent_asg,
-            "entity_ivf",
-            ent_del.withColumnRenamed("id", "vec_id"),
-            ["vec_id"],
+            build_entity_search_index(nodes_delta),
+            "entity_trigrams",
+            e_t.select(F.col("entity_id").alias("id")),
         ),
         (
-            edge_asg,
-            "edge_ivf",
-            edge_del.withColumnRenamed("id", "vec_id"),
-            ["vec_id"],
+            build_relationship_search_index(edges_delta, nodes_now),
+            "edge_trigrams",
+            edge_index_mask,
         ),
     ]
-    for df, table, delete_ids, delete_on in jobs:
+    for df, table, delete_ids in jobs:
         if cat.batch_appended(table, batch_id):
             continue
         cat.commit(
             df, table, stage="indexing", append=True, batch_id=batch_id,
-            delete_sets=[(delete_ids, delete_on)],
+            delete_sets=[(delete_ids, ["id"])],
         )
         snap = cat.current_snapshot(table)
         if len(snap.get("deletes") or []) >= INDEX_COMPACT_AFTER:
             cat.compact(spark, table, stage="indexing")
-    # the centroid-drift check runs in the CALLER (incremental_add /
-    # incremental_remove) after the final table counts — live IVF rows
-    # equal the canonical nodes/edges counts those paths already compute,
-    # so the check costs zero extra Spark jobs here

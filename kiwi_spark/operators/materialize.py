@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, FloatType
 
+from .build_graph import bucket_col
+
 EMBEDDING_DIM = 64
 
 
@@ -55,13 +57,6 @@ def hash_token(token: str) -> int:
     return h
 
 
-def with_bucket(df: DataFrame, id_col, n_buckets: int = 32) -> DataFrame:
-    col = F.col(id_col) if isinstance(id_col, str) else id_col
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
-    )
-
-
 def compact_key_col(name_col: str = "name"):
     """JVM-side twin of functions.linking.compact_name_key (the L12
     cross-file key, apps/worker/lib/sql.ts:16-22) — pure string algebra,
@@ -78,29 +73,31 @@ def materialize_nodes(nodes: DataFrame, n_buckets: int = 32) -> DataFrame:
     name point-lookups are pushed parquet filters with tight row-group
     stats (sorted within partitions), zero Python stages."""
     return (
-        with_bucket(
-            nodes.withColumn("embedding", embed_text("description"))
-            .withColumn("compact_key", compact_key_col("name")),
-            "entity_id",
-            n_buckets,
-        )
+        nodes.withColumn("embedding", embed_text("description"))
+        .withColumn("compact_key", compact_key_col("name"))
+        .withColumn("bucket", bucket_col("entity_id", n_buckets))
         .repartition("bucket")
         .sortWithinPartitions("compact_key")
     )
 
 
 def materialize_edges(edges: DataFrame, n_buckets: int = 32) -> DataFrame:
-    return with_bucket(
-        edges.withColumn("embedding", embed_text("description")), "src_id", n_buckets
-    ).repartition("bucket")
+    return (
+        edges.withColumn("embedding", embed_text("description"))
+        .withColumn("bucket", bucket_col("src_id", n_buckets))
+        .repartition("bucket")
+    )
 
 
 def materialize_mentions(mentions: DataFrame, n_buckets: int = 32) -> DataFrame:
     # edge mentions have entity_id NULL — bucket by whichever id is set so
     # they hash-distribute instead of piling into a NULL bucket (skew) and
     # edge-mention lookups prune too.
-    return with_bucket(
-        mentions.withColumn("embedding", embed_text("description")),
-        F.coalesce(F.col("entity_id"), F.col("edge_id")),
-        n_buckets,
-    ).repartition("bucket")
+    return (
+        mentions.withColumn("embedding", embed_text("description"))
+        .withColumn(
+            "bucket",
+            bucket_col(F.coalesce(F.col("entity_id"), F.col("edge_id")), n_buckets),
+        )
+        .repartition("bucket")
+    )

@@ -83,35 +83,25 @@ from .plans.search_index import SEARCH_INDEX_TABLES  # single source of truth
 
 
 def _commit_search_index(cat: Catalog, spark: SparkSession) -> None:
-    """Build + commit the ranked-search index tables over the current
-    canonical graph (plans.search_index — the GIN/DiskANN analog)."""
+    """Build + commit the trigram posting tables over the current
+    canonical graph (plans.search_index — the GIN analog)."""
     from .plans.search_index import (
         build_entity_search_index,
         build_relationship_search_index,
-        centroid_rows,
-        record_ivf_training,
     )
 
     nodes_m = cat.read(spark, "nodes")
     edges_m = cat.read(spark, "edges")
-    e_post, e_asg, e_cents = build_entity_search_index(nodes_m)
-    r_post, r_asg, r_cents = build_relationship_search_index(edges_m, nodes_m)
-    cents = centroid_rows(spark, "entity", e_cents).unionByName(
-        centroid_rows(spark, "edge", r_cents)
-    )
     _parallel_commits(
         cat,
         [
-            (e_post, "entity_trigrams", "indexing"),
-            (e_asg, "entity_ivf", "indexing"),
-            (r_post, "edge_trigrams", "indexing"),
-            (r_asg, "edge_ivf", "indexing"),
-            (cents, "ivf_centroids", "indexing"),
+            (build_entity_search_index(nodes_m), "entity_trigrams", "indexing"),
+            (
+                build_relationship_search_index(edges_m, nodes_m),
+                "edge_trigrams",
+                "indexing",
+            ),
         ],
-    )
-    # reference point for the centroid-drift trigger (maybe_retrain_ivf)
-    record_ivf_training(
-        cat, cat.row_count(spark, "entity_ivf"), cat.row_count(spark, "edge_ivf")
     )
 
 
@@ -243,8 +233,8 @@ def run_pipeline(
         ["nodes", "edges", "mentions"],
     )
 
-    # 5b. (opt-in) ranked-search index: trigram posting tables + IVF cells —
-    # the GIN/DiskANN analog (plans.search_index, VERDICT r3 #4)
+    # 5b. (opt-in) ranked-search index: the two trigram posting tables —
+    # the GIN analog (plans.search_index, VERDICT r3 #4)
     if build_search_index:
         stage(
             "search_index",
@@ -420,7 +410,7 @@ def incremental_add(
 
         # the canonical graph changed wholesale — rebuild the search
         # index when present, INCLUDING a partial index left by a crash
-        # during the five-table commit (ADVICE r5: gating on one table
+        # during the two-table commit (ADVICE r5: gating on one table
         # would FileNotFoundError on the missing siblings)
         if any(cat.exists(t) for t in SEARCH_INDEX_TABLES):
             started = time.time()
@@ -432,24 +422,7 @@ def incremental_add(
 
     for table in ("nodes", "edges", "mentions"):
         result.counts[table] = cat.row_count(spark, table)
-    _maybe_retrain_ivf(spark, cat, result)
     return result
-
-
-def _maybe_retrain_ivf(spark, cat: Catalog, result: PipelineResult) -> None:
-    """Centroid-drift check (VERDICT r5 watch #1) — free: live IVF rows
-    equal the canonical nodes/edges counts the batch just computed."""
-    from .plans.search_index import has_search_index, maybe_retrain_ivf
-
-    if not has_search_index(cat):
-        return
-    retrained = maybe_retrain_ivf(
-        spark, cat,
-        live_counts={"entity": result.counts.get("nodes", 0),
-                     "edge": result.counts.get("edges", 0)},
-    )
-    if retrained:
-        result.counts["ivf_retrained"] = retrained
 
 
 def incremental_update(
@@ -615,7 +588,6 @@ def incremental_remove(
 
     for table in ("nodes", "edges", "mentions"):
         result.counts[table] = cat.row_count(spark, table)
-    _maybe_retrain_ivf(spark, cat, result)
 
     # the removal's decision sets are dead once the epoch advanced (only
     # an in-flight retry of THIS batch ever reads them); dropping the

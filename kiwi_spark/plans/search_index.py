@@ -1,25 +1,25 @@
-"""Pre-indexed ranked search — the GIN / DiskANN analog (VERDICT r3 #4).
+"""Pre-indexed ranked search — the GIN analog (VERDICT r3 #4).
 
 The reference's Postgres backend amortizes ranked entity/relationship
 search with a pg_trgm GIN index (keyword leg) and a DiskANN index
 (semantic leg) over the graph tables (packages/db, graph.ts:227-228).
 The round-3 engine was faithful to the *semantics* but re-scanned every
 active row per query through a pandas-UDF trigram scorer. This module
-materializes the same two index structures Spark-first:
+materializes the keyword leg's index Spark-first as a **trigram posting
+table** (``build_trigram_index``): one row per (id, field, gram) with the
+field's total gram count, written sorted by gram so a query's
+``gram IN (...)`` probe is a pushed parquet filter. pg_trgm similarity is
+then EXACT from the probe alone:
+``sim(value, term) = hits / (n_grams + |G(term)| - hits)`` because the
+probe rows for a term are precisely the intersection. The posting rows
+are built with the same Python ``_trigrams`` twin the full-scan scorer
+uses, so index and scan agree bit-for-bit.
 
-* **trigram posting table** (``build_trigram_index``) — one row per
-  (id, field, gram) with the field's total gram count, written sorted by
-  gram so a query's ``gram IN (...)`` probe is a pushed parquet filter.
-  pg_trgm similarity is then EXACT from the probe alone:
-  ``sim(value, term) = hits / (n_grams + |G(term)| - hits)`` because the
-  probe rows for a term are precisely the intersection. The posting rows
-  are built with the same Python ``_trigrams`` twin the full-scan scorer
-  uses, so index and scan agree bit-for-bit.
-* **IVF cells over the embedding column** (``operators.similarity
-  .ivf_build``) — the semantic leg probes ``nprobe`` nearest cells
-  instead of scanning the corpus; ``nprobe=len(centroids)`` is provably
-  exhaustive (the parity tests pin indexed ≡ full-scan there), smaller
-  values trade recall for scan size exactly like DiskANN.
+The semantic leg has no index table: it scores ``embedding`` on the
+nodes/edges frame the query joins anyway, with the same ``cosine_to``
+expression the full-scan scorer uses. An ANN index pays only when a probe
+skips most of the corpus; ``operators.similarity`` holds the cell-pruned
+ANN operator to route to once such a crossover is measured.
 
 Query-time decomposition (exact, not heuristic): every entity outside
 the trigram candidate set shares no gram with any term, so its keyword
@@ -37,7 +37,7 @@ whole-stage codegen (the full-scan path needed one pandas UDF per query).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from .queries import (
@@ -143,43 +143,25 @@ def _gramless_candidates(base: DataFrame, id_col: str, terms: list[str],
     return base.where(cond).select(F.col(id_col).alias("id"))
 
 
-def _semantic_probe(assigned: DataFrame, centroids: list[list[float]],
-                    query_vec: list[float], nprobe: int) -> DataFrame:
-    """IVF cell-pruned scan: (vec_id, _sem) over the probed cells only."""
-    import numpy as np
-
-    q = np.asarray(query_vec, dtype=float)
-    qn = float(np.linalg.norm(q)) or 1.0
-    sims = [
-        float(np.dot(q, np.asarray(c)) / (qn * (float(np.linalg.norm(c)) or 1.0)))
-        for c in centroids
-    ]
-    probe = sorted(range(len(centroids)), key=lambda i: -sims[i])[:nprobe]
-    return assigned.where(F.col("cell").isin(probe)).select(
-        "vec_id", F.greatest(F.lit(0.0), cosine_to(query_vec, "embedding")).alias("_sem")
-    )
-
-
-def _score_and_topk(scored: DataFrame, cand_ids: DataFrame, sem_leg: DataFrame,
-                    out_cols: list[str], id_col: str, limit: int,
-                    cursor: tuple | None, attrs: DataFrame) -> DataFrame:
+def _score_and_topk(scored: DataFrame, cand_ids: DataFrame, base: DataFrame,
+                    query_vec: list[float], out_cols: list[str], id_col: str,
+                    limit: int, cursor: tuple | None) -> DataFrame:
     """Union the two legs, keyset-filter, global top-k.
 
-    The semantic leg anti-joins against the CANDIDATE id set (not the
-    scored subtree): candidates that failed the recall filter have
-    sem < MIN_SEMANTIC_SCORE by definition, so excluding them from the
-    semantic leg too cannot change the result."""
+    The semantic leg scores every ``base`` row outside the CANDIDATE id
+    set (not the scored subtree): candidates that failed the recall
+    filter have sem < MIN_SEMANTIC_SCORE by definition, so excluding them
+    from the semantic leg too cannot change the result."""
     sem_only = (
-        sem_leg.join(
-            cand_ids.select(F.col("id").alias("vec_id")), "vec_id", "left_anti"
-        )
-        .where(F.col("_sem") >= MIN_SEMANTIC_SCORE)
-        .select(F.col("vec_id").alias(id_col), F.col("_sem").alias("score"))
+        base.join(cand_ids.withColumnRenamed("id", id_col), id_col, "left_anti")
+        .withColumn("score", F.greatest(F.lit(0.0), cosine_to(query_vec, "embedding")))
+        .where(F.col("score") >= MIN_SEMANTIC_SCORE)
     )
     sem_only = _keyset(sem_only, cursor, "score", id_col)
     # only the top-`limit` pure-semantic rows can enter the final top-k
-    sem_only = sem_only.orderBy(F.desc("score"), F.asc(id_col)).limit(limit)
-    sem_rows = sem_only.join(attrs, id_col).select(*out_cols)
+    sem_rows = (
+        sem_only.orderBy(F.desc("score"), F.asc(id_col)).limit(limit).select(*out_cols)
+    )
     cand_rows = _keyset(scored, cursor, "score", id_col).select(*out_cols)
     return (
         cand_rows.unionByName(sem_rows)
@@ -189,14 +171,12 @@ def _score_and_topk(scored: DataFrame, cand_ids: DataFrame, sem_leg: DataFrame,
 
 
 def search_entities_indexed(nodes: DataFrame, posting: DataFrame,
-                            assigned: DataFrame, centroids: list[list[float]],
                             query_text: str, limit: int = 10,
                             cursor: tuple | None = None,
-                            keywords: list[str] | None = None,
-                            nprobe: int | None = None) -> DataFrame:
+                            keywords: list[str] | None = None) -> DataFrame:
     """Index-probing twin of ``queries.search_entities`` — identical
-    results when ``nprobe`` covers all cells (the default), bounded
-    candidate scan instead of a full corpus scan either way."""
+    results; the keyword scores come from the posting probe instead of a
+    per-row Python scorer."""
     terms = unique_terms([*(keywords or []), query_text])
     if not terms:
         return nodes.sparkSession.createDataFrame(
@@ -228,25 +208,18 @@ def search_entities_indexed(nodes: DataFrame, posting: DataFrame,
         )
     )
     out_cols = ["entity_id", "name", "type", "description", "n_sources", "score"]
-    sem_leg = _semantic_probe(
-        assigned, centroids, qvec, nprobe or len(centroids)
-    )
-    attrs = nodes.select("entity_id", "name", "type", "description", "n_sources")
     return _score_and_topk(
-        cand, cand_ids, sem_leg, out_cols, "entity_id", limit, cursor, attrs
+        cand, cand_ids, nodes, qvec, out_cols, "entity_id", limit, cursor
     )
 
 
 def search_relationships_indexed(edges: DataFrame, nodes: DataFrame,
-                                 posting: DataFrame, assigned: DataFrame,
-                                 centroids: list[list[float]],
-                                 query_text: str, limit: int = 10,
-                                 cursor: tuple | None = None,
-                                 keywords: list[str] | None = None,
-                                 nprobe: int | None = None) -> DataFrame:
+                                 posting: DataFrame, query_text: str,
+                                 limit: int = 10, cursor: tuple | None = None,
+                                 keywords: list[str] | None = None) -> DataFrame:
     """Index-probing twin of ``queries.search_relationships``. The posting
     table must cover fields description/src_name/dst_name (see
-    ``build_relationship_trigram_index``)."""
+    ``build_relationship_search_index``)."""
     terms = unique_terms([*(keywords or []), query_text])
     if not terms:
         return edges.sparkSession.createDataFrame(
@@ -285,195 +258,51 @@ def search_relationships_indexed(edges: DataFrame, nodes: DataFrame,
         "edge_id", "src_id", "src_name", "dst_id", "dst_name", "pred",
         "description", "strength", "score",
     ]
-    sem_leg = _semantic_probe(assigned, centroids, qvec, nprobe or len(centroids))
-    attrs = named.select(
-        "edge_id", "src_id", "src_name", "dst_id", "dst_name", "pred",
-        "description", "strength",
-    )
     return _score_and_topk(
-        cand, cand_ids, sem_leg, out_cols, "edge_id", limit, cursor, attrs
+        cand, cand_ids, named, qvec, out_cols, "edge_id", limit, cursor
     )
 
 
-def centroid_rows(spark, kind: str, centroids: list[list[float]]) -> DataFrame:
-    """Centroid table rows — any IVF index stores its centroids centrally."""
-    return spark.createDataFrame(
-        [(kind, i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "kind string, cell int, v array<double>",
-    )
+def build_entity_search_index(nodes: DataFrame) -> DataFrame:
+    """Posting table for ``search_entities_indexed`` — call at
+    materialize time over the canonical nodes table."""
+    return build_trigram_index(nodes, "entity_id", {"name": "name"})
 
 
-def load_centroids(centroid_df: DataFrame, kind: str) -> list[list[float]]:
-    rows = centroid_df.where(F.col("kind") == kind).orderBy("cell").collect()
-    return [list(r["v"]) for r in rows]
-
-
-def build_entity_search_index(nodes: DataFrame, n_cells: int = 16,
-                              seed: int = 5):
-    """(posting, assigned, centroids) for ``search_entities_indexed`` —
-    call at materialize time over the canonical nodes table."""
-    from ..operators.similarity import ivf_build
-
-    posting = build_trigram_index(nodes, "entity_id", {"name": "name"})
-    assigned, centroids = ivf_build(
-        nodes, n_cells=n_cells, seed=seed,
-        id_col="entity_id", vec_col="embedding",
-    )
-    return posting, assigned, centroids
-
-
-def build_relationship_search_index(edges: DataFrame, nodes: DataFrame,
-                                    n_cells: int = 16, seed: int = 5):
-    """(posting, assigned, centroids) for ``search_relationships_indexed``."""
-    from ..operators.similarity import ivf_build
-
-    named = _edges_with_names(edges, nodes)
-    posting = build_trigram_index(
-        named,
+def build_relationship_search_index(edges: DataFrame,
+                                    nodes: DataFrame) -> DataFrame:
+    """Posting table for ``search_relationships_indexed``."""
+    return build_trigram_index(
+        _edges_with_names(edges, nodes),
         "edge_id",
         {"description": "description", "src_name": "src_name",
          "dst_name": "dst_name"},
     )
-    assigned, centroids = ivf_build(
-        edges, n_cells=n_cells, seed=seed,
-        id_col="edge_id", vec_col="embedding",
-    )
-    return posting, assigned, centroids
-
-
-# --------------------------------------------------------------------------
-# IVF centroid-drift refresh (VERDICT r5 watch #1)
-# --------------------------------------------------------------------------
-
-# retrain a leg when its vector count moved this far from the trained count
-IVF_DRIFT_THRESHOLD = 0.5
-
-
-def record_ivf_training(cat, entity_rows: int, edge_rows: int) -> None:
-    """Persist the vector counts the current centroids were trained on —
-    the reference point for the drift trigger."""
-    cat.set_property(
-        "ivf_trained_rows", {"entity": int(entity_rows), "edge": int(edge_rows)}
-    )
-
-
-def maybe_retrain_ivf(spark, cat, threshold: float = IVF_DRIFT_THRESHOLD,
-                      n_cells: int = 16, seed: int = 5,
-                      live_counts: dict | None = None) -> list[str]:
-    """Retrain drifted IVF legs (returns the kinds retrained, [] if none).
-
-    Incremental batches assign new vectors to FROZEN cells — exactly how
-    DiskANN/IVF indexes absorb inserts — which keeps queries exact only
-    while the default nprobe probes every cell. Under sustained ingestion
-    (or bulk removal) the data distribution walks away from the centroids
-    and partial-probe recall silently decays; the reference's DiskANN
-    index rebuilds its graph as rows churn (graph.ts:227-228). The
-    trigger: a leg's live vector count differing from its trained count
-    by more than ``threshold`` (growth or shrinkage — both move the
-    distribution). Retraining is a full re-run of the Lloyd build over
-    the live canonical table, committed as a CLEAN snapshot (drains that
-    leg's MOR delete chain, like a compaction) that carries the live
-    batch-id lineage forward so retried batches still skip. Recall-guard
-    test: tests/test_search_index.py::test_drift_retrain_restores_partial_probe_recall.
-    """
-    from ..operators.similarity import ivf_build
-
-    # operational knob: a warehouse can tune its own trigger (e.g. lower
-    # it for fast-drifting corpora) without code changes
-    threshold = float(cat.get_property("ivf_drift_threshold", threshold))
-    trained = dict(cat.get_property("ivf_trained_rows") or {})
-    plans = {
-        "entity": ("entity_ivf", "nodes", "entity_id"),
-        "edge": ("edge_ivf", "edges", "edge_id"),
-    }
-    drifted = []
-    counts = {}
-    for kind, (ivf_table, _src, _id) in plans.items():
-        # live assignment rows ≡ live canonical rows (the delta paths
-        # append/mask them in lockstep — pinned by the no-stale-ids
-        # parity tests), so callers that already counted nodes/edges pass
-        # those in and the check costs no extra Spark jobs
-        if live_counts is not None and kind in live_counts:
-            cur = int(live_counts[kind])
-        else:
-            cur = cat.row_count(spark, ivf_table)
-        counts[kind] = cur
-        t = int(trained.get(kind, 0))
-        if cur == 0:
-            # an emptied leg has nothing to train on — record the count
-            # (so the next growth re-triggers) and leave the stale
-            # centroids in place (queries over zero assignments are empty)
-            if t != 0:
-                trained[kind] = 0
-                record_ivf_training(
-                    cat, trained.get("entity", 0), trained.get("edge", 0)
-                )
-            continue
-        if t <= 0 or abs(cur - t) > threshold * max(t, 1):
-            drifted.append(kind)
-    if not drifted:
-        return []
-
-    new_cents: dict[str, list[list[float]]] = {}
-    for kind in drifted:
-        ivf_table, src_table, id_col = plans[kind]
-        src = cat.read(spark, src_table)
-        assigned, cents = ivf_build(
-            src, n_cells=n_cells, seed=seed,
-            id_col=id_col, vec_col="embedding",
-        )
-        cat.commit(
-            assigned, ivf_table, stage="indexing",
-            batch_ids=cat.live_batch_ids(ivf_table) or None,
-        )
-        new_cents[kind] = cents
-        trained[kind] = counts[kind]
-    cents_df = None
-    for kind in ("entity", "edge"):
-        part = (
-            centroid_rows(spark, kind, new_cents[kind])
-            if kind in new_cents
-            else cat.read(spark, "ivf_centroids").where(F.col("kind") == kind)
-        )
-        cents_df = part if cents_df is None else cents_df.unionByName(part)
-    cat.commit(
-        cents_df, "ivf_centroids", stage="indexing",
-        batch_ids=cat.live_batch_ids("ivf_centroids") or None,
-    )
-    record_ivf_training(cat, trained.get("entity", 0), trained.get("edge", 0))
-    return drifted
 
 
 # --------------------------------------------------------------------------
 # auto-routing (VERDICT r4 #7): serve from the index when it exists
 # --------------------------------------------------------------------------
 
-SEARCH_INDEX_TABLES = (
-    "entity_trigrams", "entity_ivf", "edge_trigrams", "edge_ivf",
-    "ivf_centroids",
-)
+SEARCH_INDEX_TABLES = ("entity_trigrams", "edge_trigrams")
 
 
 def has_search_index(cat) -> bool:
-    """True iff all five index tables are committed in the warehouse."""
+    """True iff both posting tables are committed in the warehouse."""
     return all(cat.exists(t) for t in SEARCH_INDEX_TABLES)
 
 
 def search_entities_auto(spark, cat, nodes: DataFrame, query_text: str,
                          limit: int = 10, cursor: tuple | None = None,
                          keywords: list[str] | None = None) -> DataFrame:
-    """Q2 with automatic index routing: probe the trigram/IVF tables when
-    the warehouse has them (result-identical, bounded candidate scan),
-    fall back to the full-scan scorer otherwise — the same transparent
-    behavior a Postgres planner gives the reference's GIN/DiskANN
-    indexes (graph.ts:227-228)."""
+    """Q2 with automatic index routing: probe the trigram posting tables
+    when the warehouse has them (result-identical), fall back to the
+    full-scan scorer otherwise — the same transparent behavior a Postgres
+    planner gives the reference's GIN index (graph.ts:227-228)."""
     if has_search_index(cat):
         return search_entities_indexed(
-            nodes,
-            cat.read(spark, "entity_trigrams"),
-            cat.read(spark, "entity_ivf"),
-            load_centroids(cat.read(spark, "ivf_centroids"), "entity"),
-            query_text, limit=limit, cursor=cursor, keywords=keywords,
+            nodes, cat.read(spark, "entity_trigrams"), query_text,
+            limit=limit, cursor=cursor, keywords=keywords,
         )
     from .queries import search_entities
 
@@ -489,11 +318,8 @@ def search_relationships_auto(spark, cat, edges: DataFrame, nodes: DataFrame,
     """Q4 with automatic index routing (see ``search_entities_auto``)."""
     if has_search_index(cat):
         return search_relationships_indexed(
-            edges, nodes,
-            cat.read(spark, "edge_trigrams"),
-            cat.read(spark, "edge_ivf"),
-            load_centroids(cat.read(spark, "ivf_centroids"), "edge"),
-            query_text, limit=limit, cursor=cursor, keywords=keywords,
+            edges, nodes, cat.read(spark, "edge_trigrams"), query_text,
+            limit=limit, cursor=cursor, keywords=keywords,
         )
     from .queries import search_relationships
 

@@ -24,8 +24,9 @@ def _q(value: str) -> str:
 def register_graph_views(spark: SparkSession, warehouse: str,
                          prefix: str = "kg_") -> list[str]:
     """Register kg_nodes / kg_edges / … temp views over the warehouse —
-    plus the five ranked-search index tables when the warehouse has them
-    (kg_entity_trigrams …), so SQL users can probe postings directly."""
+    plus the two trigram posting tables when the warehouse has them
+    (kg_entity_trigrams, kg_edge_trigrams), so SQL users can probe
+    postings directly."""
     from .search_index import SEARCH_INDEX_TABLES
 
     cat = Catalog(warehouse)
@@ -40,9 +41,9 @@ def register_graph_views(spark: SparkSession, warehouse: str,
 def search_entities(spark: SparkSession, warehouse: str, query_text: str,
                     limit: int = 10, keywords: list[str] | None = None) -> DataFrame:
     """Q2 from the SQL surface with automatic index routing: probes the
-    trigram/IVF tables when the warehouse has them (result-identical),
+    trigram posting tables when the warehouse has them (result-identical),
     full-scan otherwise — mirroring how the reference's Postgres planner
-    transparently uses its GIN/DiskANN indexes."""
+    transparently uses its GIN index."""
     from .search_index import search_entities_auto
 
     cat = Catalog(warehouse)

@@ -1,11 +1,10 @@
 """Pre-indexed ranked search (plans/search_index.py) — VERDICT r3 #4.
 
-Parity: with an exhaustive semantic probe (nprobe = all cells), the
-indexed search must return EXACTLY what the full-scan scorer returns —
-same rows, same scores, same order — across keyword lists, cursors,
-prefix/exact boosts and gram-less terms. Plan: the indexed query path
-must contain zero Python stages and probe the posting table with a
-pushed filter instead of scanning every row.
+Parity: the indexed search must return EXACTLY what the full-scan
+scorer returns — same rows, same scores, same order — across keyword
+lists, cursors, prefix/exact boosts and gram-less terms. Plan: the
+indexed query path must contain zero Python stages and probe the posting
+table with a pushed filter instead of scanning every row.
 """
 
 import pytest
@@ -69,22 +68,13 @@ def corpus(spark, tmp_path_factory):
     materialize_edges(edges_raw, n_buckets=4).write.parquet(epath)
     edges = spark.read.parquet(epath)
 
-    e_posting, e_assigned, e_cents = build_entity_search_index(nodes, n_cells=4)
     ppath = str(base / "entity_trigrams")
-    e_posting.write.parquet(ppath)
-    e_posting = spark.read.parquet(ppath)
-    apath = str(base / "entity_ivf")
-    e_assigned.write.parquet(apath)
-    e_assigned = spark.read.parquet(apath)
-
-    r_posting, r_assigned, r_cents = build_relationship_search_index(
-        edges, nodes, n_cells=4
-    )
+    build_entity_search_index(nodes).write.parquet(ppath)
     return {
         "nodes": nodes,
         "edges": edges,
-        "ent": (e_posting, e_assigned, e_cents),
-        "rel": (r_posting, r_assigned, r_cents),
+        "ent": spark.read.parquet(ppath),
+        "rel": build_relationship_search_index(edges, nodes),
     }
 
 
@@ -105,25 +95,23 @@ ENTITY_CASES = [
 
 @pytest.mark.parametrize("case", ENTITY_CASES, ids=[c["q"] for c in ENTITY_CASES])
 def test_entity_search_parity(corpus, case):
-    posting, assigned, cents = corpus["ent"]
     kwargs = {k: v for k, v in case.items() if k != "q"}
     expected = _rows(search_entities(corpus["nodes"], case["q"], **kwargs))
     got = _rows(
         search_entities_indexed(
-            corpus["nodes"], posting, assigned, cents, case["q"], **kwargs
+            corpus["nodes"], corpus["ent"], case["q"], **kwargs
         )
     )
     assert got == expected
 
 
 def test_entity_search_parity_with_cursor(corpus):
-    posting, assigned, cents = corpus["ent"]
     first = search_entities(corpus["nodes"], "apple", limit=2).collect()
     cursor = (first[-1]["score"], first[-1]["entity_id"])
     expected = _rows(search_entities(corpus["nodes"], "apple", cursor=cursor))
     got = _rows(
         search_entities_indexed(
-            corpus["nodes"], posting, assigned, cents, "apple", cursor=cursor
+            corpus["nodes"], corpus["ent"], "apple", cursor=cursor
         )
     )
     assert got == expected
@@ -140,14 +128,13 @@ REL_CASES = [
 
 @pytest.mark.parametrize("case", REL_CASES, ids=[c["q"] for c in REL_CASES])
 def test_relationship_search_parity(corpus, case):
-    posting, assigned, cents = corpus["rel"]
     kwargs = {k: v for k, v in case.items() if k != "q"}
     expected = _rows(
         search_relationships(corpus["edges"], corpus["nodes"], case["q"], **kwargs)
     )
     got = _rows(
         search_relationships_indexed(
-            corpus["edges"], corpus["nodes"], posting, assigned, cents,
+            corpus["edges"], corpus["nodes"], corpus["rel"],
             case["q"], **kwargs,
         )
     )
@@ -157,10 +144,7 @@ def test_relationship_search_parity(corpus, case):
 def test_indexed_plan_python_free_and_pushed_probe(corpus):
     """The full-scan path needs a pandas UDF per query; the indexed path
     must be pure JVM with the gram probe pushed into the parquet scan."""
-    posting, assigned, cents = corpus["ent"]
-    df = search_entities_indexed(
-        corpus["nodes"], posting, assigned, cents, "apple"
-    )
+    df = search_entities_indexed(corpus["nodes"], corpus["ent"], "apple")
     jvm = df.sparkSession._jvm
     plan = df._jdf.queryExecution().explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -172,8 +156,7 @@ def test_indexed_plan_python_free_and_pushed_probe(corpus):
 
 
 def test_posting_table_shape(corpus):
-    posting, _, _ = corpus["ent"]
-    row = posting.where(
+    row = corpus["ent"].where(
         (F.col("id") == "e000") & (F.col("gram") == "app")
     ).collect()
     assert len(row) == 1
@@ -182,10 +165,11 @@ def test_posting_table_shape(corpus):
 
 
 def test_pipeline_search_index_stage_end_to_end(spark, tmp_path):
-    """run_pipeline(build_search_index=True) commits the five index tables
-    and warehouse-loaded indexed search matches the full-scan scorer."""
+    """run_pipeline(build_search_index=True) commits exactly the two
+    posting tables and warehouse-loaded indexed search matches the
+    full-scan scorer."""
     from kiwi_spark.pipeline import run_pipeline
-    from kiwi_spark.plans.search_index import load_centroids
+    from kiwi_spark.plans.search_index import SEARCH_INDEX_TABLES
     from kiwi_spark.sources.catalog import Catalog
     from kiwi_spark.sources.pages import pages_df
 
@@ -195,35 +179,28 @@ def test_pipeline_search_index_stage_end_to_end(spark, tmp_path):
     )
     assert "search_index" in result.stages_run
     cat = Catalog(wh)
-    for table in ("entity_trigrams", "entity_ivf", "edge_trigrams",
-                  "edge_ivf", "ivf_centroids"):
-        assert cat.exists(table), table
+    assert SEARCH_INDEX_TABLES == ("entity_trigrams", "edge_trigrams")
+    indexing = {r["table"] for r in cat.lineage() if r["stage"] == "indexing"}
+    assert indexing == set(SEARCH_INDEX_TABLES)
+    assert not [t for t in cat.tables() if "ivf" in t]
+    assert not [p for p in cat.properties() if "ivf" in p]
 
     nodes = cat.read(spark, "nodes")
     edges = cat.read(spark, "edges")
-    cents = cat.read(spark, "ivf_centroids")
     some = nodes.select("name").orderBy("entity_id").limit(3).collect()
     for row in some:
         q = row["name"].split()[0]
         expected = _rows(search_entities(nodes, q))
         got = _rows(
             search_entities_indexed(
-                nodes,
-                cat.read(spark, "entity_trigrams"),
-                cat.read(spark, "entity_ivf"),
-                load_centroids(cents, "entity"),
-                q,
+                nodes, cat.read(spark, "entity_trigrams"), q
             )
         )
         assert got == expected, q
     expected = _rows(search_relationships(edges, nodes, some[0]["name"]))
     got = _rows(
         search_relationships_indexed(
-            edges, nodes,
-            cat.read(spark, "edge_trigrams"),
-            cat.read(spark, "edge_ivf"),
-            load_centroids(cents, "edge"),
-            some[0]["name"],
+            edges, nodes, cat.read(spark, "edge_trigrams"), some[0]["name"]
         )
     )
     assert got == expected
@@ -240,7 +217,6 @@ def test_incremental_add_rebuilds_search_index(spark, tmp_path):
     """After incremental ingestion changes the canonical graph, a
     previously-built search index must be rebuilt, not left stale."""
     from kiwi_spark.pipeline import incremental_add, run_pipeline
-    from kiwi_spark.plans.search_index import load_centroids
     from kiwi_spark.sources.catalog import Catalog
     from kiwi_spark.sources.pages import pages_df
 
@@ -256,19 +232,13 @@ def test_incremental_add_rebuilds_search_index(spark, tmp_path):
     name = nodes.orderBy(F.desc("n_sources"), "entity_id").first()["name"]
     expected = _rows(search_entities(nodes, name))
     got = _rows(
-        search_entities_indexed(
-            nodes,
-            cat.read(spark, "entity_trigrams"),
-            cat.read(spark, "entity_ivf"),
-            load_centroids(cat.read(spark, "ivf_centroids"), "entity"),
-            name,
-        )
+        search_entities_indexed(nodes, cat.read(spark, "entity_trigrams"), name)
     )
     assert got == expected
 
 
 def test_auto_routing_parity_and_fallback(spark, tmp_path):
-    """VERDICT r4 #7: the query surface auto-detects the five index
+    """VERDICT r4 #7: the query surface auto-detects the two posting
     tables — Q2/Q4 route through the indexed twins when present
     (result-identical) and fall back to the full scan when any table is
     missing."""
@@ -307,7 +277,7 @@ def test_auto_routing_parity_and_fallback(spark, tmp_path):
     assert _rows(sql_api.search_relationships(spark, wh, term)) == expected_r
 
     # dropping any one index table breaks completeness → full-scan fallback
-    cat.drop("entity_ivf")
+    cat.drop("entity_trigrams")
     assert not has_search_index(cat)
     assert _rows(search_entities_auto(spark, cat, nodes, term)) == expected_e
     assert (
@@ -338,126 +308,10 @@ def test_ivf_build_survives_empty_scan_partitions(spark, tmp_path):
     assert assigned.count() == 7 and len(cents) == 3
 
 
-def test_drift_retrain_restores_partial_probe_recall(spark, tmp_path):
-    """VERDICT r5 watch #1: frozen IVF cells silently degrade partial-probe
-    recall when the data distribution drifts (a disjoint-world batch lands
-    after training). The drift trigger must retrain the leg and restore
-    recall; nprobe=all stays exact throughout.
-
-    Construction guarantees the frozen failure: centroids trained on two
-    axis clusters; the new cluster's members alternate a tiny dim-0/dim-1
-    bias, so frozen assignment SPLITS them across the two old cells and a
-    one-cell probe can only ever see half of them."""
-    from kiwi_spark.operators.similarity import _assign_cells, cosine_topk, ivf_topk
-    from kiwi_spark.plans.search_index import (
-        centroid_rows,
-        load_centroids,
-        maybe_retrain_ivf,
-        record_ivf_training,
-    )
-    import numpy as np
-
-    cat = Catalog(str(tmp_path / "wh_drift"))
-
-    def node_rows(prefix, vecs):
-        return [(f"{prefix}{i:03d}", [float(x) for x in v]) for i, v in enumerate(vecs)]
-
-    old_vecs = [[1.0, 0.0, 0.0, 0.0]] * 15 + [[0.0, 1.0, 0.0, 0.0]] * 15
-    old_nodes = spark.createDataFrame(
-        node_rows("a", old_vecs), "entity_id string, embedding array<float>"
-    )
-    cents = np.asarray([[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]])
-    cat.commit(old_nodes, "nodes", stage="saving")
-    cat.commit(
-        _assign_cells(old_nodes, cents, "embedding").select(
-            F.col("entity_id").alias("vec_id"), "embedding", "cell"
-        ),
-        "entity_ivf", stage="indexing",
-    )
-    # edge leg present but quiescent (drift check must leave it alone)
-    edge_nodes = spark.createDataFrame(
-        node_rows("e", [[0.5, 0.5, 0.0, 0.0]] * 4),
-        "edge_id string, embedding array<float>",
-    )
-    cat.commit(edge_nodes, "edges", stage="saving")
-    cat.commit(
-        _assign_cells(edge_nodes, cents, "embedding").select(
-            F.col("edge_id").alias("vec_id"), "embedding", "cell"
-        ),
-        "edge_ivf", stage="indexing",
-    )
-    cat.commit(
-        centroid_rows(spark, "entity", cents.tolist()).unionByName(
-            centroid_rows(spark, "edge", cents.tolist())
-        ),
-        "ivf_centroids", stage="indexing",
-    )
-    record_ivf_training(cat, 30, 4)
-
-    assert maybe_retrain_ivf(spark, cat) == []  # no drift yet
-
-    # disjoint-world batch: 60 vectors on dim 2, alternating tiny biases
-    new_vecs = [
-        [0.1, 0.0, 2.0, 0.0] if i % 2 == 0 else [0.0, 0.1, 2.0, 0.0]
-        for i in range(60)
-    ]
-    new_nodes = spark.createDataFrame(
-        node_rows("c", new_vecs), "entity_id string, embedding array<float>"
-    )
-    cat.commit(
-        cat.read(spark, "nodes").unionByName(new_nodes), "nodes", stage="saving"
-    )
-    cat.commit(
-        _assign_cells(new_nodes, cents, "embedding").select(
-            F.col("entity_id").alias("vec_id"), "embedding", "cell"
-        ),
-        "entity_ivf", stage="indexing", append=True, batch_id="drift1",
-    )
-
-    q = [0.0, 0.0, 1.0, 0.0]
-
-    def recall_at_10(assigned, centroids, nprobe):
-        exact = {
-            r["vec_id"]
-            for r in cosine_topk(
-                cat.read(spark, "nodes"), q, k=10,
-                id_col="entity_id", vec_col="embedding",
-            ).collect()
-        }
-        got = {
-            r["vec_id"]
-            for r in ivf_topk(assigned, centroids, q, k=10, nprobe=nprobe).collect()
-        }
-        return len(got & exact) / 10.0
-
-    frozen_assigned = cat.read(spark, "entity_ivf")
-    frozen_recall = recall_at_10(frozen_assigned, cents.tolist(), nprobe=1)
-    assert frozen_recall == 0.5  # the guaranteed split
-
-    # n_cells=3 over {axis-A, axis-B, drift-C}: the Lloyd rebuild settles
-    # one centroid per cluster (seeded sample + first-max tie rule →
-    # deterministic), so the one-cell probe now sees ALL of C
-    retrained = maybe_retrain_ivf(spark, cat, n_cells=3)
-    assert retrained == ["entity"]  # edge leg untouched
-    assert int(cat.current_snapshot("edge_ivf")["id"]) == 1
-
-    new_cents = load_centroids(cat.read(spark, "ivf_centroids"), "entity")
-    new_assigned = cat.read(spark, "entity_ivf")
-    retrained_recall = recall_at_10(new_assigned, new_cents, nprobe=1)
-    assert retrained_recall == 1.0 > frozen_recall
-    # nprobe = all cells stays exact after retrain
-    assert recall_at_10(new_assigned, new_cents, nprobe=len(new_cents)) == 1.0
-    # trained counts updated → immediately re-checking is a no-op
-    assert maybe_retrain_ivf(spark, cat) == []
-    # batch lineage carried through the clean retrain snapshot: the
-    # pre-retrain batch still reads as appended (retry would skip)
-    assert cat.batch_appended("entity_ivf", "drift1")
-
-
-def test_incremental_growth_triggers_retrain(spark, tmp_path):
-    """Integration: tripling the corpus through incremental_add crosses
-    IVF_DRIFT_THRESHOLD — the delta index maintenance must retrain the
-    drifted legs and the indexed search must stay parity afterwards."""
+def test_incremental_growth_keeps_auto_search_parity(spark, tmp_path):
+    """Integration: after tripling the corpus through incremental_add,
+    the delta-maintained posting tables still serve search_entities_auto
+    with exactly the full-scan ranking."""
     from kiwi_spark.pipeline import incremental_add, run_pipeline
     from kiwi_spark.plans.search_index import search_entities_auto
     from kiwi_spark.sources.pages import pages_df
@@ -467,16 +321,8 @@ def test_incremental_growth_triggers_retrain(spark, tmp_path):
     batch = pages_df(spark, 30, seed=67, partitions=2, start=10)
     run_pipeline(spark, base, wh, build_search_index=True)
     cat = Catalog(wh)
-    cat.set_property("ivf_drift_threshold", 0.1)  # the operational knob
-    trained_before = dict(cat.get_property("ivf_trained_rows"))
-    cents_snap_before = cat.current_snapshot("ivf_centroids")["id"]
 
     incremental_add(spark, batch, wh)
-
-    trained_after = dict(cat.get_property("ivf_trained_rows"))
-    assert trained_after["entity"] > trained_before["entity"]
-    assert cat.current_snapshot("ivf_centroids")["id"] > cents_snap_before
-    assert trained_after["entity"] == cat.read(spark, "entity_ivf").count()
 
     nodes = cat.read(spark, "nodes")
     term = nodes.select("name").first()["name"]
