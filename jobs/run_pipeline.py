@@ -1,12 +1,19 @@
 """spark-submit entrypoint: run the KG-construction pipeline.
 
 Usage:
-    spark-submit [--master local[N]] jobs/run_pipeline.py \
+    spark-submit [--master local[N]] \
+        --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \
+        jobs/run_pipeline.py \
         --input <dir-with-pages.parquet> | --synthesize N \
         --warehouse <out-dir> [--link-mode parity|fuzzy] [--resume] \
         [--seed 42] [--buckets 32]
 
 Prints one JSON line with stage timings, row counts and triples/sec.
+
+The ``--conf`` keeps the one-shot driver JVM at HotSpot's C1 tier (see
+``kiwi_spark.session``). spark-submit starts the JVM before this script
+runs, so the session config's copy of the option only applies when the
+script is started with plain ``python``.
 """
 
 from __future__ import annotations
@@ -22,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 from kiwi_spark.pipeline import run_pipeline
+from kiwi_spark.session import BATCH_DRIVER_JAVA_OPTIONS
 from kiwi_spark.sources.pages import pages_df
 
 
@@ -97,6 +105,7 @@ def main() -> int:
                 os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
         .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.sql.autoBroadcastJoinThreshold", "128m")
+        .config("spark.driver.defaultJavaOptions", BATCH_DRIVER_JAVA_OPTIONS)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

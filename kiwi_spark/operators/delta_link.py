@@ -329,7 +329,7 @@ def delta_relink(
     stats = DeltaStats()
     t0 = _time.time()
 
-    batch_nodes = spark.read.parquet(*cat.batch_paths("nodes_doc", batch_id))
+    batch_nodes = cat.read_batch(spark, "nodes_doc", batch_id)
     batch_keys = link_keys_df(batch_nodes, link_mode)
     e_t = touched_entity_ids(
         batch_keys,

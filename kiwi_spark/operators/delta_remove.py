@@ -144,7 +144,7 @@ def removal_sets(
         )
         cat.commit(sets_df, "removal_sets", stage="deleting", append=True,
                    batch_id=batch_id)
-    sets = spark.read.parquet(*cat.batch_paths("removal_sets", batch_id))
+    sets = cat.read_batch(spark, "removal_sets", batch_id)
     e_r = sets.where(F.col("kind") == "removed").select(
         F.col("id").alias("entity_id")
     )

@@ -359,12 +359,12 @@ def incremental_add(
 
     # process only the new urls through the kernel (read back from the
     # batch's own snapshot dir — no semi-join over the whole text table)
-    text_new = spark.read.parquet(*cat.batch_paths("text", batch_id)).where(
+    text_new = cat.read_batch(spark, "text", batch_id).where(
         F.col("error_code").isNull()
     )
     started = time.time()
     _append(lambda: graph_rows_df(text_new), "raw_graph", "extracting")
-    raw_new = spark.read.parquet(*cat.batch_paths("raw_graph", batch_id))
+    raw_new = cat.read_batch(spark, "raw_graph", batch_id)
     _append(lambda: explode_units(raw_new.select("units")), "units", "chunking")
     n, e, m = explode_graph(raw_new)
     # match the views' bucketed layout (absent on pre-round-6 warehouses);

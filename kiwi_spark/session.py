@@ -3,6 +3,23 @@
 Scale posture: AQE on (runtime re-planning + skew-join splitting), Arrow
 batching for every pandas stage, shuffle partitions sized for local[32]
 testing but overridable via env for cluster runs (spark-submit --conf wins).
+
+JIT posture: the driver JVM stops at HotSpot's C1 tier
+(``BATCH_DRIVER_JAVA_OPTIONS``). Every batch workflow here is one-shot:
+the JVM plans a few dozen jobs over a few MB and exits, and C2 spends
+more CPU optimising Spark's planner and codegen than the optimised code
+ever saves. On a 4-vCPU host a cold 200-page indexed build at local[4]
+spent 18-19 s of CPU in the C2 compiler threads, about 30% of its
+total. The trade-off turns with session length: a long-lived session (a
+test suite, a notebook, a serving driver) runs its hot code long enough
+for C2 to pay back. Such a caller restores C2 either by overriding
+``spark.driver.defaultJavaOptions`` in ``extra_conf`` or by appending
+``-XX:TieredStopAtLevel=4`` to ``spark.driver.extraJavaOptions`` (the JVM
+honours the last flag, and Spark places the extra options after the
+default ones). The option reaches only the driver: on a cluster the
+executors keep C2 for the data path. Under ``spark-submit`` the JVM
+starts before ``get_spark`` runs, so pass it there as
+``--conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1``.
 """
 
 from __future__ import annotations
@@ -10,6 +27,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+BATCH_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
 
 
 def get_spark(
@@ -64,6 +83,7 @@ def get_spark(
         # 6.5 s instead of 4.5 s once its classes had been evicted). Static
         # conf; a few thousand compiled classes cost low tens of MB.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
+        .config("spark.driver.defaultJavaOptions", BATCH_DRIVER_JAVA_OPTIONS)
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -7,15 +7,18 @@ The sandbox has no Iceberg runtime jar, so this module implements the same
 contract on plain parquet:
 
     <warehouse>/<table>/snap-<n>/   immutable parquet data
-    <warehouse>/<table>/MANIFEST.json  {current, snapshots[]}, a snapshot
-        {id, stage, dirs, deletes, partitions: [[partition_id, rows, bytes]]}
+    <warehouse>/<table>/MANIFEST.json  {current, schema, snapshots[]},
+        a snapshot {id, stage, dirs, deletes,
+        partitions: [[partition_id, rows, bytes]]}
 
 Mapping to Iceberg in production: ``commit`` ≡ table.newAppend/replace
 snapshot commit; ``MANIFEST.json`` ≡ the catalog pointer; readers always go
 through the manifest so a half-written snap-<n> directory is never visible
 (write-then-flip, same isolation Iceberg gives via metadata swap).
 ``partitions`` ≡ Iceberg's per-data-file ``record_count``, read from the
-commit's own parquet footers, so ``row_count`` and ``lineage`` need no job.
+commit's own parquet footers, so ``row_count`` and ``lineage`` need no job;
+``schema`` ≡ the table's Iceberg schema, so ``read`` runs no parquet
+schema-inference job either.
 
 Everything is driver-side metadata only — data paths are read/written by
 Spark executors as ordinary parquet (predicate pushdown and column pruning
@@ -30,6 +33,22 @@ import shutil
 import time
 
 import pyarrow.parquet as pq
+from pyspark.sql.types import StructType
+
+
+def _as_nullable(node):
+    """A schema's JSON with every field, array element and map value
+    nullable — what Spark's parquet writer records, whatever the
+    DataFrame declared."""
+    if isinstance(node, dict):
+        return {
+            k: True if k in ("nullable", "containsNull", "valueContainsNull")
+            else _as_nullable(v)
+            for k, v in node.items()
+        }
+    if isinstance(node, list):
+        return [_as_nullable(v) for v in node]
+    return node
 
 
 class Catalog:
@@ -310,15 +329,6 @@ class Catalog:
             for s in self._read_manifest(table)["snapshots"]
         )
 
-    def batch_paths(self, table: str, batch_id: str) -> list[str]:
-        """Data dirs written by the snapshot(s) tagged with batch_id."""
-        manifest = self._read_manifest(table) or {"snapshots": []}
-        return [
-            os.path.join(self.warehouse, table, s["dir"])
-            for s in manifest["snapshots"]
-            if s.get("batch_id") == batch_id
-        ]
-
     @staticmethod
     def _dir_has_data(path: str) -> bool:
         """True iff the dir holds at least one parquet data file. A
@@ -330,46 +340,68 @@ class Catalog:
         return False
 
     def table_schema(self, spark, table: str):
-        """Schema of the table from its first data-bearing snapshot dir
-        (partition columns included via discovery), falling back to the
-        manifest's recorded schema when no live dir holds data files
-        (e.g. a fully-masked-then-compacted partitioned table)."""
+        """The table's schema as a parquet read gives it back: the
+        manifest's recorded schema with every field nullable and the
+        partition columns moved to the end in layout order, exactly what
+        schema inference yields — but with no inference job. Manifests
+        written before schemas were recorded fall back to inferring from
+        the first data-bearing dir."""
+        manifest = self._read_manifest(table) or {}
+        recorded = manifest.get("schema")
+        if recorded:
+            fields = StructType.fromJson(_as_nullable(recorded)).fields
+            layout = manifest.get("partition_by") or []
+            by_name = {f.name: f for f in fields}
+            return StructType(
+                [f for f in fields if f.name not in layout]
+                + [by_name[c] for c in layout]
+            )
         for path in self.paths(table):
             if self._dir_has_data(path):
                 return spark.read.parquet(path).schema
-        recorded = (self._read_manifest(table) or {}).get("schema")
-        if recorded:
-            from pyspark.sql.types import StructType
-
-            return StructType.fromJson(recorded)
         raise FileNotFoundError(f"table {table!r} has no data files")
 
-    def _read_paths(self, spark, table: str, paths: list[str],
+    def _read_paths(self, spark, paths: list[str], schema,
                     layout: list[str] | None):
-        """One DataFrame over several snapshot dirs. Partitioned tables
-        must be read per root dir and unioned (Spark's partition discovery
-        rejects multiple roots), which also keeps per-scan
-        PartitionFilters pushdown; dataless dirs are skipped."""
+        """One DataFrame over several snapshot dirs, read with the
+        table's schema. Partitioned tables must be read per root dir and
+        unioned (Spark's partition discovery rejects multiple roots),
+        which also keeps per-scan PartitionFilters pushdown; dataless
+        dirs are skipped."""
         if not layout:
-            return spark.read.parquet(*paths)
+            return spark.read.schema(schema).parquet(*paths)
         out = None
         for path in paths:
             if not self._dir_has_data(path):
                 continue
-            part = spark.read.parquet(path)
+            part = spark.read.schema(schema).parquet(path)
             out = part if out is None else out.unionByName(part)
         if out is None:
-            return spark.createDataFrame([], self.table_schema(spark, table))
+            return spark.createDataFrame([], schema)
         return out
+
+    def read_batch(self, spark, table: str, batch_id: str):
+        """The rows written by the snapshot(s) tagged with batch_id."""
+        manifest = self._read_manifest(table) or {"snapshots": []}
+        paths = [
+            os.path.join(self.warehouse, table, s["dir"])
+            for s in manifest["snapshots"]
+            if s.get("batch_id") == batch_id
+        ]
+        return self._read_paths(
+            spark, paths, self.table_schema(spark, table),
+            manifest.get("partition_by"),
+        )
 
     def read(self, spark, table: str):
         snap = self.current_snapshot(table)
         if snap is None:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
         layout = (self._read_manifest(table) or {}).get("partition_by")
+        schema = self.table_schema(spark, table)
         deletes = snap.get("deletes") or []
         if not deletes:
-            return self._read_paths(spark, table, self.paths(table), layout)
+            return self._read_paths(spark, self.paths(table), schema, layout)
         # merge-on-read: equality deletes mask rows from snapshots OLDER
         # than the delete (Iceberg sequence-number semantics) — a commit
         # that deletes key K and appends new K rows keeps the new rows.
@@ -386,12 +418,12 @@ class Catalog:
             )
         out = None
         for applicable, paths in sorted(by_delset.items()):
-            part = self._read_paths(spark, table, paths, layout)
+            part = self._read_paths(spark, paths, schema, layout)
             for i in applicable:
                 dl = deletes[i]
-                keys = spark.read.parquet(
-                    os.path.join(self.warehouse, table, dl["dir"])
-                )
+                keys = spark.read.schema(
+                    StructType([schema[c] for c in dl["on"]])
+                ).parquet(os.path.join(self.warehouse, table, dl["dir"]))
                 part = part.join(keys, on=list(dl["on"]), how="left_anti")
             out = part if out is None else out.unionByName(part)
         return out

@@ -6,8 +6,10 @@
 * recall of the generator's intended mention/relation ground truth
 * resume-from-checkpoint
 * commit-recorded row counts and lineage (Catalog.row_count/lineage)
+* manifest-recorded schemas (Catalog.read runs no inference job)
 """
 
+import os
 import shutil
 
 import pytest
@@ -178,3 +180,43 @@ def test_row_count_runs_no_spark_job(spark, warehouse):
     # the probe sees a job when one runs
     cat.read(spark, "nodes").count()
     assert set(tracker.getJobIdsForGroup(None)) - before
+
+
+def test_catalog_read_runs_no_spark_job(spark, warehouse, tmp_path):
+    """Catalog.read takes the schema from the manifest: opening a table
+    runs no schema-inference job, and the schema equals the inferred one
+    (partition columns last, every field nullable) for a partitioned and
+    an unpartitioned table, with and without equality deletes."""
+    cat = Catalog(str(tmp_path / "wh_schema"))
+    ddl = "eb int not null, id int not null, name string, vec array<float>"
+    rows = [(i % 3, i, f"n{i}", [float(i)]) for i in range(12)]
+    more = [(i % 3, i, f"m{i}", [float(-i)]) for i in range(12, 15)]
+    keys = spark.createDataFrame([(1,), (5,)], "id int")
+    for table, layout in (("part_del", ["eb"]), ("flat_del", None)):
+        cat.commit(spark.createDataFrame(rows, ddl), table, partition_by=layout)
+        cat.commit(spark.createDataFrame(more, ddl), table, append=True,
+                   delete_sets=[(keys, ["id"])])
+        assert cat.current_snapshot(table)["deletes"]
+    base = Catalog(warehouse)
+    assert not base.current_snapshot("nodes").get("deletes")
+    tables = [(base, "nodes_doc"), (base, "nodes"),
+              (cat, "part_del"), (cat, "flat_del")]
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    schemas = {t: c.read(spark, t).schema for c, t in tables}
+    recorded = {t: c.table_schema(spark, t) for c, t in tables}
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+    for c, t in tables:
+        first = os.path.join(c.warehouse, t, c.current_snapshot(t)["dirs"][0])
+        inferred = spark.read.parquet(first).schema
+        assert schemas[t] == inferred and recorded[t] == inferred, t
+    assert schemas["part_del"].names == ["id", "name", "vec", "eb"]
+    assert schemas["nodes_doc"].names[-1] == "eb"
+    # the probe sees the inference jobs
+    assert set(tracker.getJobIdsForGroup(None)) - before
+
+    for t in ("part_del", "flat_del"):
+        got = sorted(r["id"] for r in cat.read(spark, t).collect())
+        assert got == [i for i in range(15) if i not in (1, 5)], t

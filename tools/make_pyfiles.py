@@ -6,6 +6,7 @@ the zip to the driver and every executor):
 
     python tools/make_pyfiles.py [out.zip]
     spark-submit --master <cluster> --py-files kiwi_spark.zip \\
+        --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \\
         jobs/run_pipeline.py --input s3://…/pages --warehouse s3://…/wh
 
 Only ``kiwi_spark/**/*.py`` (plus any vendored ``kiwi_spark/data/*``) is
