@@ -26,10 +26,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from kiwi_spark.pipeline import run_pipeline
-from kiwi_spark.session import BATCH_DRIVER_JAVA_OPTIONS
+from kiwi_spark.session import engine_builder
 from kiwi_spark.sources.pages import pages_df
 
 
@@ -38,10 +36,18 @@ def main() -> int:
     parser.add_argument("--input", help="directory containing pages.parquet")
     parser.add_argument("--synthesize", type=int, help="generate N synthetic pages")
     parser.add_argument("--warehouse", required=True)
-    parser.add_argument("--link-mode", choices=["parity", "fuzzy"], default="parity")
+    parser.add_argument(
+        "--link-mode", choices=["parity", "fuzzy"], default="parity",
+        help="a mutation of an existing warehouse must pass its recorded "
+             "mode (--remove reads it)",
+    )
     parser.add_argument("--resume", action="store_true")
     parser.add_argument("--seed", type=int, default=42)
-    parser.add_argument("--buckets", type=int, default=32)
+    parser.add_argument(
+        "--buckets", type=int, default=32,
+        help="bucket count of a warehouse this run creates; an existing "
+             "warehouse keeps its recorded count",
+    )
     parser.add_argument("--shuffle-partitions", type=int, default=None)
     parser.add_argument(
         "--search-index", action="store_true",
@@ -95,19 +101,7 @@ def main() -> int:
     if not args.input and not args.synthesize and not args.stream_dir:
         parser.error("one of --input / --synthesize / --stream-dir is required")
 
-    spark = (
-        SparkSession.builder.appName("kiwi-kg-pipeline")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
-        .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.sql.autoBroadcastJoinThreshold", "128m")
-        .config("spark.driver.defaultJavaOptions", BATCH_DRIVER_JAVA_OPTIONS)
-        .getOrCreate()
-    )
+    spark = engine_builder("kiwi-kg-pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if args.shuffle_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
@@ -166,13 +160,7 @@ def main() -> int:
     elif args.remove:
         from kiwi_spark.pipeline import incremental_remove
 
-        result = incremental_remove(
-            spark,
-            pages.select("url"),
-            args.warehouse,
-            link_mode=args.link_mode,
-            n_buckets=args.buckets,
-        )
+        result = incremental_remove(spark, pages.select("url"), args.warehouse)
     elif args.update:
         from kiwi_spark.pipeline import incremental_update
 

@@ -19,9 +19,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from kiwi_spark.plans import queries as Q
+from kiwi_spark.session import engine_builder
 from kiwi_spark.sources.catalog import Catalog
 
 
@@ -47,7 +46,7 @@ def main() -> int:
     )
     args = parser.parse_args()
 
-    spark = SparkSession.builder.appName("kiwi-query").getOrCreate()
+    spark = engine_builder("kiwi-query").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     cat = Catalog(args.warehouse)
     nodes = cat.read(spark, "nodes")

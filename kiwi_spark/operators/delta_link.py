@@ -118,18 +118,15 @@ def touched_buckets(ids: DataFrame, id_col: str, n_buckets: int) -> list[int]:
     )
 
 
-def _view_buckets(cat, ids: DataFrame, id_col: str) -> list[int] | None:
-    """``touched_buckets`` under the warehouse's doc-view layout; None on
-    pre-layout warehouses (no ``doc_view_buckets`` property)."""
-    n_buckets = cat.get_property("doc_view_buckets")
-    return touched_buckets(ids, id_col, int(n_buckets)) if n_buckets else None
+def _view_buckets(cat, ids: DataFrame, id_col: str) -> list[int]:
+    """``touched_buckets`` under the warehouse's recorded bucket count."""
+    return touched_buckets(
+        ids, id_col, int(cat.get_property("doc_view_buckets"))
+    )
 
 
-def _pruned(df: DataFrame, col: str, buckets: list[int] | None) -> DataFrame:
-    """bucket IN (...) pre-filter ahead of a touched-set semi-join; no-op
-    on pre-layout warehouses (buckets None) or when the column is absent."""
-    if buckets is None or col not in df.columns:
-        return df
+def _pruned(df: DataFrame, col: str, buckets: list[int]) -> DataFrame:
+    """bucket IN (...) pre-filter ahead of a touched-set semi-join."""
     return df.where(F.col(col).isin(buckets))
 
 
@@ -192,7 +189,6 @@ def apply_touched(
     touched_mentions_doc: DataFrame,
     touched_edge_ids: DataFrame,
     link_mode: str,
-    n_buckets: int,
     timings: dict,
 ) -> DataFrame:
     """Recompute the canonical groups of a touched set and commit them —
@@ -200,10 +196,13 @@ def apply_touched(
     (``delta_remove.delta_unlink``) share; they differ only in how they
     find E_t and its doc rows. Every commit is a merge-on-read append
     tagged with ``batch_id`` and masking the closure-property-2
-    predicates, so a crash-retry skips what already landed. Returns the
-    search-index edge mask for ``maintain_search_index``."""
+    predicates, so a crash-retry skips what already landed; ``bucket``
+    follows the recorded count. Returns the search-index edge mask for
+    ``maintain_search_index``."""
     import time as _time
     from concurrent import futures
+
+    n_buckets = int(cat.get_property("doc_view_buckets"))
 
     # --- id_map: append the recomputed touched mapping, equality-delete
     # the touched ids from earlier snapshots — O(touched) written bytes,
@@ -318,7 +317,6 @@ def delta_relink(
     cat,
     batch_id: str,
     link_mode: str = "parity",
-    n_buckets: int = 32,
 ) -> DeltaStats:
     """Run the delta pass for one appended batch: recompute id_map /
     nodes / edges / mentions for the touched set, copy-through the rest.
@@ -381,8 +379,7 @@ def delta_relink(
 
     edge_index_mask = apply_touched(
         spark, cat, batch_id, e_t, touched_nodes_doc, touched_edge_rows,
-        touched_mentions_doc, touched_edge_ids, link_mode, n_buckets,
-        stats.timings,
+        touched_mentions_doc, touched_edge_ids, link_mode, stats.timings,
     )
 
     # --- link_keys: fast-append the batch's key rows ---------------------

@@ -163,7 +163,7 @@ def _mask_by(spark, cat, table: str, keys: DataFrame, on: list[str],
     from all earlier snapshots (written bytes = the key set only)."""
     if cat.batch_appended(table, batch_id):
         return
-    empty = spark.createDataFrame([], cat.table_schema(spark, table))
+    empty = spark.createDataFrame([], cat.table_schema(table))
     cat.commit(empty, table, stage=stage, append=True, batch_id=batch_id,
                delete_sets=[(keys, on)])
 
@@ -174,7 +174,6 @@ def delta_unlink(
     urls: DataFrame,
     batch_id: str,
     link_mode: str = "parity",
-    n_buckets: int = 32,
 ) -> DeltaStats:
     """Remove the given urls' documents from the warehouse: mask their doc
     rows, recompute the touched canonical groups from the survivors, mask
@@ -241,8 +240,7 @@ def delta_unlink(
 
     edge_index_mask = apply_touched(
         spark, cat, batch_id, e_t, touched_nodes_doc, surviving_touched_edges,
-        touched_mentions_doc, touched_edge_ids, link_mode, n_buckets,
-        stats.timings,
+        touched_mentions_doc, touched_edge_ids, link_mode, stats.timings,
     )
     maintain_search_index(
         spark, cat, e_t, batch_id, edge_index_mask, stats.timings

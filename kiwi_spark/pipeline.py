@@ -113,6 +113,10 @@ def _commit_id_map(cat: Catalog, nodes_doc: DataFrame, link_mode: str) -> None:
     O(new + touched) (operators.delta_link)."""
     from .operators.delta_link import link_keys_df
 
+    # record the key family BEFORE the commits (as _views does the bucket
+    # count): incremental batches validate against it, and a crash after
+    # the commits must not leave a resumed warehouse without it
+    cat.set_property("link_mode", link_mode)
     _parallel_commits(
         cat,
         [
@@ -120,16 +124,13 @@ def _commit_id_map(cat: Catalog, nodes_doc: DataFrame, link_mode: str) -> None:
             (link_keys_df(nodes_doc, link_mode), "link_keys", "deduplicating"),
         ],
     )
-    # record the key family the persisted link_keys/id_map were built
-    # with — incremental batches validate against it (a mismatched
-    # --link-mode would compute the touched set from the wrong keys)
-    cat.set_property("link_mode", link_mode)
 
 
 def _commit_graph(spark: SparkSession, cat: Catalog, nodes_doc: DataFrame,
-                  edges_doc: DataFrame, mentions_doc: DataFrame,
-                  n_buckets: int) -> None:
-    """Canonical graph over the committed id_map, materialized."""
+                  edges_doc: DataFrame, mentions_doc: DataFrame) -> None:
+    """Canonical graph over the committed id_map, materialized under the
+    warehouse's recorded bucket count."""
+    n_buckets = int(cat.get_property("doc_view_buckets"))
     nodes, edges, mentions = canonicalize(
         nodes_doc, edges_doc, mentions_doc, cat.read(spark, "id_map")
     )
@@ -141,6 +142,21 @@ def _commit_graph(spark: SparkSession, cat: Catalog, nodes_doc: DataFrame,
             (materialize_mentions(mentions, n_buckets), "mentions", "saving"),
         ],
     )
+
+
+def _doc_view_jobs(raw_graph: DataFrame, n_buckets: int) -> list[tuple]:
+    """The doc-view commits of a build and of every add: units plus the
+    three bucketed doc-level views with their partition specs."""
+    n, e, m = with_doc_view_buckets(*explode_graph(raw_graph), n_buckets)
+    return [
+        (explode_units(raw_graph.select("units")), "units", "chunking", {}),
+        (n, "nodes_doc", "extracting", {"partition_by": ["eb"]}),
+        (
+            e, "edges_doc", "extracting",
+            {"partition_by": ["sb"], "sort_within": ["db"]},
+        ),
+        (m, "mentions_doc", "extracting", {"partition_by": ["mb"]}),
+    ]
 
 
 @dataclass
@@ -196,22 +212,9 @@ def run_pipeline(
         # property BEFORE the commits: a crash after all four views are
         # committed but before the property write would otherwise leave a
         # resume=True warehouse whose manifests declare the layout while
-        # incremental batches (gated on the property) never add the bucket
-        # columns — failing every later append
+        # no recorded bucket count tells later batches how to fill it
         cat.set_property("doc_view_buckets", n_buckets)
-        n, e, m = with_doc_view_buckets(*explode_graph(raw_graph), n_buckets)
-        _parallel_commits(
-            cat,
-            [
-                (explode_units(raw_graph.select("units")), "units", "chunking"),
-                (n, "nodes_doc", "extracting", {"partition_by": ["eb"]}),
-                (
-                    e, "edges_doc", "extracting",
-                    {"partition_by": ["sb"], "sort_within": ["db"]},
-                ),
-                (m, "mentions_doc", "extracting", {"partition_by": ["mb"]}),
-            ],
-        )
+        _parallel_commits(cat, _doc_view_jobs(raw_graph, n_buckets))
 
     stage("views", _views, ["units", "nodes_doc", "edges_doc", "mentions_doc"])
 
@@ -227,9 +230,7 @@ def run_pipeline(
     )
     stage(
         "graph",
-        lambda: _commit_graph(
-            spark, cat, nodes_doc, edges_doc, mentions_doc, n_buckets
-        ),
+        lambda: _commit_graph(spark, cat, nodes_doc, edges_doc, mentions_doc),
         ["nodes", "edges", "mentions"],
     )
 
@@ -251,21 +252,27 @@ def run_pipeline(
 APPEND_COMPACT_AFTER = 16  # fast-append dirs per doc view before rewrite
 
 
-def _check_link_mode(cat: Catalog, link_mode: str) -> None:
-    """Delta correctness requires every incremental batch to use the key
-    family the warehouse's link_keys/id_map were built with (ADVICE r5):
-    raise on mismatch, backfill the property for pre-round-6 warehouses."""
-    stored = cat.get_property("link_mode")
-    if stored is None:
-        if cat.exists("link_keys"):
-            cat.set_property("link_mode", link_mode)
-        return
-    if stored != link_mode:
+def _recorded_layout(cat: Catalog, link_mode: str | None = None
+                     ) -> tuple[str, int]:
+    """The warehouse's recorded (link_mode, doc_view_buckets), which
+    every mutation after its creation follows. A delta pass must use the
+    key family link_keys/id_map were built with (ADVICE r5): raise on a
+    different ``link_mode``, and on a warehouse missing either value."""
+    props = cat.properties()
+    if "link_mode" not in props or "doc_view_buckets" not in props:
+        raise ValueError(
+            f"warehouse {cat.warehouse!r} records no link_mode/"
+            "doc_view_buckets property: it was written by an older "
+            "version; rebuild it with run_pipeline"
+        )
+    stored = props["link_mode"]
+    if link_mode is not None and stored != link_mode:
         raise ValueError(
             f"warehouse was linked with link_mode={stored!r}; an incremental "
             f"batch with link_mode={link_mode!r} would compute the touched "
             "set from a mismatched key family and corrupt the graph"
         )
+    return stored, int(props["doc_view_buckets"])
 
 
 @_single_writer
@@ -286,9 +293,14 @@ def incremental_add(
     pages and fast-append to the text/raw_graph/views tables (no rewrite of
     existing data); the cross-document linking + canonical graph are then
     recomputed for the canonical groups the batch touches only
-    (operators.delta_link), or globally while the warehouse has no
-    link_keys index yet. Deterministic: the result equals a from-scratch
-    run over the union of all pages (tested).
+    (operators.delta_link), or globally while the warehouse has no graph
+    yet. Deterministic: the result equals a from-scratch run over the
+    union of all pages (tested).
+
+    ``link_mode`` and ``n_buckets`` apply only to a warehouse the call
+    creates (recorded before its first commit, as ``run_pipeline`` does);
+    an existing warehouse's recorded values win, and a different
+    ``link_mode`` raises.
 
     Crash-safe: every fast-append is tagged with a deterministic batch id
     (order-insensitive xxhash64-xor over the batch's urls). A retried call
@@ -296,7 +308,10 @@ def incremental_add(
     already-appended tables instead of duplicating rows (tested)."""
     cat = Catalog(warehouse)
     result = PipelineResult(warehouse=warehouse)
-    _check_link_mode(cat, link_mode)
+    if not cat.tables():
+        cat.set_property("link_mode", link_mode)
+        cat.set_property("doc_view_buckets", n_buckets)
+    link_mode, n_buckets = _recorded_layout(cat, link_mode)
 
     # deterministic idempotency key: one tiny distributed agg, one driver
     # row. The key hashes CONTENT as well as urls — a re-submission of the
@@ -312,20 +327,15 @@ def incremental_add(
         F.count("*").alias("n"),
     ).first()
     epoch = int(cat.get_property("removal_epoch", 0))
-    base_id = f"b{(sig['h'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}-{sig['n']}"
-    content = f"{(sig['c'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}"
-    batch_id = f"{base_id}x{content}-e{epoch}"
-    if epoch == 0 and cat.batch_appended("text", base_id):
-        # pre-round-6 warehouses tagged batches WITHOUT the epoch/content
-        # suffix; a retry of such a batch must keep its original id or
-        # every idempotency check would miss and double-append its rows
-        batch_id = base_id
+    h, c = ((sig[k] or 0) & 0xFFFFFFFFFFFFFFFF for k in ("h", "c"))
+    batch_id = f"b{h:016x}-{sig['n']}x{c:016x}-e{epoch}"
 
-    def _append(df_builder, table: str, stage: str):
+    def _append(df_builder, table: str, stage: str, layout=None):
         if cat.batch_appended(table, batch_id):
             result.stages_skipped.append(f"{table}_append")
             return
-        cat.commit(df_builder(), table, stage=stage, append=True, batch_id=batch_id)
+        cat.commit(df_builder(), table, stage=stage, append=True,
+                   batch_id=batch_id, **(layout or {}))
 
     # url-conflict guard: adding a url the warehouse already holds would
     # silently duplicate its doc rows (the reference's file ids are
@@ -365,30 +375,21 @@ def incremental_add(
     started = time.time()
     _append(lambda: graph_rows_df(text_new), "raw_graph", "extracting")
     raw_new = cat.read_batch(spark, "raw_graph", batch_id)
-    _append(lambda: explode_units(raw_new.select("units")), "units", "chunking")
-    n, e, m = explode_graph(raw_new)
-    # match the views' bucketed layout (absent on pre-round-6 warehouses);
-    # the catalog re-applies the stored partition spec on every append
-    view_buckets = cat.get_property("doc_view_buckets")
-    if view_buckets:
-        n, e, m = with_doc_view_buckets(n, e, m, int(view_buckets))
-    _append(lambda: n, "nodes_doc", "extracting")
-    _append(lambda: e, "edges_doc", "extracting")
-    _append(lambda: m, "mentions_doc", "extracting")
+    for df, table, stage, layout in _doc_view_jobs(raw_new, n_buckets):
+        _append(lambda: df, table, stage, layout)
     result.timings["ingest_append"] = round(time.time() - started, 3)
 
-    # relink: DELTA pass when the link_keys index exists (O(new + touched),
-    # operators.delta_link — VERDICT r4 #1/#2). Without it — the first
-    # batch into an empty warehouse (e.g. stream_ingest's first
-    # micro-batch) or a warehouse built before link_keys existed — run the
-    # global pass of run_pipeline, which bootstraps link_keys for next time.
+    # relink: DELTA pass over the committed graph (O(new + touched),
+    # operators.delta_link — VERDICT r4 #1/#2). Before the graph exists —
+    # the first batch into an empty warehouse (e.g. stream_ingest's first
+    # micro-batch), or a retry of one that crashed before its graph
+    # commits — run the global pass of run_pipeline, which bootstraps
+    # link_keys for next time. No search index exists yet in either case.
     started = time.time()
-    if cat.exists("link_keys"):
+    if all(cat.exists(t) for t in ("link_keys", "nodes", "edges", "mentions")):
         from .operators.delta_link import delta_relink
 
-        stats = delta_relink(
-            spark, cat, batch_id, link_mode=link_mode, n_buckets=n_buckets
-        )
+        stats = delta_relink(spark, cat, batch_id, link_mode=link_mode)
         result.timings["relink"] = round(time.time() - started, 3)
         result.timings.update(
             {f"relink_{k}": v for k, v in stats.timings.items()}
@@ -403,20 +404,10 @@ def incremental_add(
         _commit_id_map(cat, nodes_doc, link_mode)
         _commit_graph(
             spark, cat, nodes_doc, cat.read(spark, "edges_doc"),
-            cat.read(spark, "mentions_doc"), n_buckets,
+            cat.read(spark, "mentions_doc"),
         )
         result.timings["relink"] = round(time.time() - started, 3)
         result.stages_run = ["text_append", "ingest_append", "relink"]
-
-        # the canonical graph changed wholesale — rebuild the search
-        # index when present, INCLUDING a partial index left by a crash
-        # during the two-table commit (ADVICE r5: gating on one table
-        # would FileNotFoundError on the missing siblings)
-        if any(cat.exists(t) for t in SEARCH_INDEX_TABLES):
-            started = time.time()
-            _commit_search_index(cat, spark)
-            result.timings["search_index"] = round(time.time() - started, 3)
-            result.stages_run.append("search_index")
 
     _auto_compact(spark, cat, result, compact_appends_after)
 
@@ -447,11 +438,16 @@ def incremental_update(
     the add leg proceeds; a crash inside either leg replays that leg
     idempotently by its batch id. Either way the retry converges to the
     same end state: ≡ a from-scratch build where these urls carry the
-    new content (tested)."""
-    with Catalog(warehouse).mutation_lock():
+    new content (tested).
+
+    ``link_mode`` must match the warehouse's (checked before the remove
+    leg); ``n_buckets`` is passed to the add leg."""
+    cat = Catalog(warehouse)
+    with cat.mutation_lock():
+        _recorded_layout(cat, link_mode)
         result = incremental_remove.__wrapped__(
-            spark, pages.select("url"), warehouse, link_mode=link_mode,
-            n_buckets=n_buckets, compact_appends_after=compact_appends_after,
+            spark, pages.select("url"), warehouse,
+            compact_appends_after=compact_appends_after,
         )
         add = incremental_add.__wrapped__(
             spark, pages, warehouse, link_mode=link_mode, n_buckets=n_buckets,
@@ -491,7 +487,7 @@ def _auto_compact(spark, cat: Catalog, result: PipelineResult,
     compacted = []
     for table in _COMPACTABLE_TABLES:
         snap = cat.current_snapshot(table) if cat.exists(table) else None
-        chain = len(snap.get("dirs") or []) if snap else 0
+        chain = len(snap["dirs"]) if snap else 0
         deletes = len(snap.get("deletes") or []) if snap else 0
         if max(chain, deletes) >= compact_appends_after:
             cat.compact(spark, table)
@@ -507,8 +503,6 @@ def incremental_remove(
     spark: SparkSession,
     urls,
     warehouse: str,
-    link_mode: str = "parity",
-    n_buckets: int = 32,
     compact_appends_after: int = APPEND_COMPACT_AFTER,
 ) -> PipelineResult:
     """Remove documents from an existing warehouse — the reference's
@@ -519,7 +513,9 @@ def incremental_remove(
 
     ``urls`` is a DataFrame with a ``url`` column or a list of url
     strings. Urls absent from the warehouse are ignored (the reference
-    returns early on an unknown fileId, delete-file.ts:30-32).
+    returns early on an unknown fileId, delete-file.ts:30-32). A removal
+    never creates a warehouse: it follows the recorded link mode and
+    bucket count.
 
     Crash-safe and retry-idempotent: the removal's decision sets are the
     FIRST commit (tagged with the batch id) and every table mutation is
@@ -530,7 +526,7 @@ def incremental_remove(
     removals so a removed url can be re-ingested."""
     cat = Catalog(warehouse)
     result = PipelineResult(warehouse=warehouse)
-    _check_link_mode(cat, link_mode)
+    link_mode = _recorded_layout(cat)[0]
 
     if not isinstance(urls, DataFrame):
         urls = spark.createDataFrame([(u,) for u in urls], "url string")
@@ -568,9 +564,7 @@ def incremental_remove(
             return result
 
     started = time.time()
-    stats = delta_unlink(
-        spark, cat, urls, batch_id, link_mode=link_mode, n_buckets=n_buckets
-    )
+    stats = delta_unlink(spark, cat, urls, batch_id, link_mode=link_mode)
     result.timings["remove"] = round(time.time() - started, 3)
     result.timings.update({f"remove_{k}": v for k, v in stats.timings.items()})
     result.counts["removed_entities"] = stats.n_removed_entities

@@ -31,24 +31,16 @@ from pyspark.sql import SparkSession
 BATCH_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
 
 
-def get_spark(
-    app_name: str = "kiwi_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict | None = None,
-) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    )
-    builder = (
+def engine_builder(app_name: str) -> SparkSession.Builder:
+    """A builder with the settings every session of this engine carries
+    and no master. A script started by ``spark-submit`` calls
+    ``.getOrCreate()`` on it, so ``--master`` wins; ``get_spark`` adds a
+    master and local-mode sizing."""
+    return (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # CPU-heavy Arrow/pandas stages need many more splits than the 128m
         # default gives: a 100 TB corpus splits fine either way, but local
@@ -63,6 +55,24 @@ def get_spark(
         # entity→canonical map) so fact-side tables never shuffle; on a
         # cluster this is per-executor memory, sized accordingly
         .config("spark.sql.autoBroadcastJoinThreshold", "128m")
+        .config("spark.driver.defaultJavaOptions", BATCH_DRIVER_JAVA_OPTIONS)
+    )
+
+
+def get_spark(
+    app_name: str = "kiwi_spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict | None = None,
+) -> SparkSession:
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    shuffle_partitions = shuffle_partitions or int(
+        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
+    )
+    builder = (
+        engine_builder(app_name).master(master)
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # guide §3.1/§9: let the planner pick shuffled-hash over sort-merge
         # when the per-partition build side fits — skips both sort passes;
         # AQE's local-map threshold enables the same rewrite at runtime
@@ -83,7 +93,6 @@ def get_spark(
         # 6.5 s instead of 4.5 s once its classes had been evicted). Static
         # conf; a few thousand compiled classes cost low tens of MB.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.driver.defaultJavaOptions", BATCH_DRIVER_JAVA_OPTIONS)
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

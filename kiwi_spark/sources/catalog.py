@@ -8,8 +8,12 @@ contract on plain parquet:
 
     <warehouse>/<table>/snap-<n>/   immutable parquet data
     <warehouse>/<table>/MANIFEST.json  {current, schema, snapshots[]},
-        a snapshot {id, stage, dirs, deletes,
+        a snapshot {id, stage, dir, dirs, deletes,
         partitions: [[partition_id, rows, bytes]]}
+
+One shape: ``schema``, ``dirs`` (live data dirs, ``dir`` the snapshot's
+own) and ``partitions`` are always present, ``deletes`` only when the
+snapshot has equality deletes; rebuild older warehouses with run_pipeline.
 
 Mapping to Iceberg in production: ``commit`` ≡ table.newAppend/replace
 snapshot commit; ``MANIFEST.json`` ≡ the catalog pointer; readers always go
@@ -153,8 +157,7 @@ class Catalog:
         snap = self.current_snapshot(table)
         if snap is None:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
-        dirs = snap.get("dirs") or [snap["dir"]]
-        return [os.path.join(self.warehouse, table, d) for d in dirs]
+        return [os.path.join(self.warehouse, table, d) for d in snap["dirs"]]
 
     # -- commit / read -----------------------------------------------------
     def commit(self, df, table: str, stage: str | None = None,
@@ -236,7 +239,7 @@ class Catalog:
             prev = next(
                 s for s in manifest["snapshots"] if s["id"] == manifest["current"]
             )
-            dirs = (prev.get("dirs") or [prev["dir"]]) + [snap_dir]
+            dirs = prev["dirs"] + [snap_dir]
             deletes = list(prev.get("deletes") or []) + new_deletes
         snap = {
             "id": next_id,
@@ -281,18 +284,19 @@ class Catalog:
     def row_count(self, spark, table: str) -> int:
         """Live rows, summed from the ``partitions`` of the live dirs — no
         Spark job. Counts the merged read only when the manifest cannot
-        answer: the snapshot has equality deletes, or a dir has no sizes."""
+        answer: the snapshot has equality deletes."""
         snap = self.current_snapshot(table)
         if snap is None:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
+        if snap.get("deletes"):
+            return self.read(spark, table).count()
         sizes = {
-            s["dir"]: s.get("partitions")
+            s["dir"]: s["partitions"]
             for s in self._read_manifest(table)["snapshots"]
         }
-        live = [sizes[d] for d in (snap.get("dirs") or [snap["dir"]])]
-        if snap.get("deletes") or any(parts is None for parts in live):
-            return self.read(spark, table).count()
-        return sum(rows for parts in live for _pid, rows, _bytes in parts)
+        return sum(
+            rows for d in snap["dirs"] for _pid, rows, _bytes in sizes[d]
+        )
 
     def lineage(self) -> list[dict]:
         """One row per (table, snapshot, write partition) over every commit
@@ -310,7 +314,7 @@ class Catalog:
             }
             for table in self.tables()
             for s in self._read_manifest(table)["snapshots"]
-            for pid, rows, nbytes in s.get("partitions") or []
+            for pid, rows, nbytes in s["partitions"]
         ]
 
     def batch_appended(self, table: str, batch_id: str) -> bool:
@@ -319,7 +323,7 @@ class Catalog:
         cur = self.current_snapshot(table)
         if cur is None:
             return False
-        live = set(cur.get("dirs") or [cur["dir"]])
+        live = set(cur["dirs"])
         return any(
             s["dir"] in live
             and (
@@ -339,27 +343,19 @@ class Catalog:
                 return True
         return False
 
-    def table_schema(self, spark, table: str):
+    def table_schema(self, table: str):
         """The table's schema as a parquet read gives it back: the
         manifest's recorded schema with every field nullable and the
         partition columns moved to the end in layout order, exactly what
-        schema inference yields — but with no inference job. Manifests
-        written before schemas were recorded fall back to inferring from
-        the first data-bearing dir."""
-        manifest = self._read_manifest(table) or {}
-        recorded = manifest.get("schema")
-        if recorded:
-            fields = StructType.fromJson(_as_nullable(recorded)).fields
-            layout = manifest.get("partition_by") or []
-            by_name = {f.name: f for f in fields}
-            return StructType(
-                [f for f in fields if f.name not in layout]
-                + [by_name[c] for c in layout]
-            )
-        for path in self.paths(table):
-            if self._dir_has_data(path):
-                return spark.read.parquet(path).schema
-        raise FileNotFoundError(f"table {table!r} has no data files")
+        schema inference yields — but with no inference job."""
+        manifest = self._read_manifest(table)
+        fields = StructType.fromJson(_as_nullable(manifest["schema"])).fields
+        layout = manifest.get("partition_by") or []
+        by_name = {f.name: f for f in fields}
+        return StructType(
+            [f for f in fields if f.name not in layout]
+            + [by_name[c] for c in layout]
+        )
 
     def _read_paths(self, spark, paths: list[str], schema,
                     layout: list[str] | None):
@@ -389,7 +385,7 @@ class Catalog:
             if s.get("batch_id") == batch_id
         ]
         return self._read_paths(
-            spark, paths, self.table_schema(spark, table),
+            spark, paths, self.table_schema(table),
             manifest.get("partition_by"),
         )
 
@@ -398,7 +394,7 @@ class Catalog:
         if snap is None:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
         layout = (self._read_manifest(table) or {}).get("partition_by")
-        schema = self.table_schema(spark, table)
+        schema = self.table_schema(table)
         deletes = snap.get("deletes") or []
         if not deletes:
             return self._read_paths(spark, self.paths(table), schema, layout)
@@ -406,9 +402,8 @@ class Catalog:
         # than the delete (Iceberg sequence-number semantics) — a commit
         # that deletes key K and appends new K rows keeps the new rows.
         # Dirs sharing the same applicable delete set are read together.
-        dirs = snap.get("dirs") or [snap["dir"]]
         by_delset: dict[tuple, list[str]] = {}
-        for d in dirs:
+        for d in snap["dirs"]:
             seq = int(d.split("-")[1])
             applicable = tuple(
                 i for i, dl in enumerate(deletes) if dl["seq"] > seq
@@ -434,7 +429,7 @@ class Catalog:
         carry these forward so retried batches still skip."""
         manifest = self._read_manifest(table) or {"snapshots": []}
         cur = self.current_snapshot(table)
-        live = set((cur.get("dirs") or [cur["dir"]])) if cur else set()
+        live = set(cur["dirs"]) if cur else set()
         return sorted(
             {
                 b

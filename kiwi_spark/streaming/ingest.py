@@ -43,6 +43,8 @@ def stream_ingest(
     on_conflict: str = "update",
 ):
     """Fold page files arriving in ``pages_dir`` into ``warehouse``.
+    ``link_mode`` and ``n_buckets`` apply only to a warehouse the first
+    micro-batch creates; an existing one keeps its recorded values.
 
     Returns the terminated StreamingQuery (``available_now=True``) or the
     live query otherwise. ``max_files_per_batch`` bounds each micro-batch

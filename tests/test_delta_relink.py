@@ -300,6 +300,60 @@ def test_link_mode_mismatch_raises(spark, tmp_path):
     incremental_add(spark, batch, wh, link_mode="parity")
 
 
+def test_add_follows_recorded_bucket_count(spark, tmp_path):
+    """An add into an existing warehouse buckets the graph tables and the
+    doc views by the warehouse's recorded count, whatever its own
+    n_buckets says, so one table never mixes two bucketings."""
+    from kiwi_spark.operators.build_graph import bucket_col
+
+    wh = str(tmp_path / "wh_buckets")
+    all_pages = pages_df(spark, 16, seed=33, partitions=2)
+    base = all_pages.where(F.col("url") < "https://s")
+    batch = all_pages.where(F.col("url") >= "https://s")
+    run_pipeline(spark, base, wh, n_buckets=4)
+    result = incremental_add(spark, batch, wh)  # default n_buckets=32
+    assert "delta_relink" in result.stages_run
+
+    cat = Catalog(wh)
+    assert cat.get_property("doc_view_buckets") == 4
+    mention_key = F.coalesce(F.col("entity_id"), F.col("edge_id"))
+    for table, col, key in (
+        ("nodes", "bucket", "entity_id"),
+        ("edges", "bucket", "src_id"),
+        ("mentions", "bucket", mention_key),
+        ("nodes_doc", "eb", "entity_id"),
+        ("edges_doc", "sb", "src_id"),
+        ("mentions_doc", "mb", mention_key),
+    ):
+        df = cat.read(spark, table)
+        assert df.count() > 0, table
+        assert df.where(F.col(col) != bucket_col(key, 4)).count() == 0, table
+
+
+def test_warehouse_without_recorded_layout_raises(spark, tmp_path):
+    """A non-empty warehouse missing the link_mode or doc_view_buckets
+    property was written by an older version: add and remove raise one
+    error that names the fix instead of guessing the layout."""
+    pages = pages_df(spark, 4, seed=97, partitions=1)
+    recorded = {"link_mode": "parity", "doc_view_buckets": 32}
+    for missing in recorded:
+        wh = str(tmp_path / missing)
+        cat = Catalog(wh)
+        cat.commit(pages.select("url"), "text")
+        for key, value in recorded.items():
+            if key != missing:
+                cat.set_property(key, value)
+        for mutate in (
+            lambda: incremental_add(spark, pages, wh),
+            lambda: incremental_remove(spark, pages.select("url"), wh),
+        ):
+            with pytest.raises(
+                ValueError,
+                match="older version; rebuild it with run_pipeline",
+            ):
+                mutate()
+
+
 @pytest.fixture(scope="module")
 def indexed_base(spark, tmp_path_factory):
     """(warehouse, base pages, batch pages): one indexed base build that
@@ -361,7 +415,7 @@ def test_partitioned_table_layout_lifecycle(spark, tmp_path):
     assert cat.read(spark, "t").count() == 30
 
     # pure-delete commit (empty partitioned write = no data files at all)
-    empty = spark.createDataFrame([], cat.table_schema(spark, "t"))
+    empty = spark.createDataFrame([], cat.table_schema("t"))
     cat.commit(
         empty, "t", append=True, batch_id="p2",
         delete_sets=[(spark.createDataFrame([(3,), (25,)], "id int"), ["id"])],

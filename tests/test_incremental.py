@@ -98,11 +98,50 @@ def test_stream_ingest_folds_arriving_files(spark, tmp_path):
     assert (
         cat.read(spark, "edges").count() == ref.read(spark, "edges").count()
     )
+    # the stream-started warehouse has the build's layout: the same
+    # recorded properties and bucketed doc views
+    assert cat.properties().keys() == ref.properties().keys()
+    for table in ("units", "nodes_doc", "edges_doc", "mentions_doc"):
+        layout = [
+            (m.get("partition_by"), m.get("sort_within"))
+            for m in (c._read_manifest(table) for c in (cat, ref))
+        ]
+        assert layout[0] == layout[1], table
     # text arrived exactly once per url
     dup = (
         cat.read(spark, "text").groupBy("url").count().where(F.col("count") > 1)
     )
     assert dup.count() == 0
+
+
+def test_first_add_retried_after_crash_before_graph(spark, tmp_path,
+                                                   monkeypatch):
+    """The first add into an empty warehouse runs the global pass; a
+    crash after its link_keys commit but before the graph commits is
+    retried with the global pass again (the delta pass needs the graph
+    tables), and ends equal to a from-scratch build."""
+    import pytest
+
+    wh = str(tmp_path / "wh")
+    wh_ref = str(tmp_path / "ref")
+    pages = pages_df(spark, 12, seed=95, partitions=2)
+    real_commit = Catalog.commit
+
+    def crashing_commit(self, df, table, *args, **kwargs):
+        if table == "edges":
+            raise RuntimeError("simulated crash in the edges commit")
+        return real_commit(self, df, table, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "commit", crashing_commit)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        incremental_add(spark, pages, wh)
+    monkeypatch.setattr(Catalog, "commit", real_commit)
+    assert Catalog(wh).exists("link_keys")
+
+    result = incremental_add(spark, pages, wh)
+    assert "relink" in result.stages_run
+    run_pipeline(spark, pages, wh_ref)
+    assert _graph_signature(spark, wh) == _graph_signature(spark, wh_ref)
 
 
 def test_add_of_existing_urls_raises(spark, tmp_path):

@@ -128,7 +128,7 @@ def test_remove_equals_complement_build_fuzzy(spark, tmp_path):
     run_pipeline(spark, all_pages, wh, link_mode="fuzzy")
     run_pipeline(spark, keep, wh_complement, link_mode="fuzzy")
 
-    incremental_remove(spark, drop.select("url"), wh, link_mode="fuzzy")
+    incremental_remove(spark, drop.select("url"), wh)
     assert _graph_signature(spark, wh) == _graph_signature(spark, wh_complement)
 
 
@@ -288,46 +288,6 @@ def test_remove_everything_on_indexed_warehouse(spark, tmp_path):
     wh_ref = str(tmp_path / "ref")
     run_pipeline(spark, pages, wh_ref)
     assert _graph_signature(spark, wh) == _graph_signature(spark, wh_ref)
-
-
-def test_pre_epoch_batch_retry_not_double_appended(spark, tmp_path):
-    """Review finding (round 6): warehouses written before the epoch
-    suffix existed tagged batches as 'b<hash>-<n>'. Retrying such a batch
-    after the upgrade must keep the original id — otherwise every
-    idempotency check misses and the rows double-append."""
-    import json
-
-    wh = str(tmp_path / "wh")
-    all_pages = pages_df(spark, 24, seed=79, partitions=2)
-    base = all_pages.where(F.col("url") < "https://s")
-    batch = all_pages.where(F.col("url") >= "https://s")
-    run_pipeline(spark, base, wh)
-    incremental_add(spark, batch, wh)
-    cat = Catalog(wh)
-    sig = _graph_signature(spark, wh)
-    n_text = cat.read(spark, "text").count()
-
-    # simulate the pre-round-6 warehouse: reduce every add-batch tag to
-    # the legacy url-only form (no content hash, no epoch suffix)
-    def _legacy(bid):
-        if bid.startswith("b") and "x" in bid and bid.endswith("-e0"):
-            return bid.split("x")[0]
-        return bid[: -len("-e0")] if bid.endswith("-e0") else bid
-
-    for table in cat.tables():
-        path = cat._manifest_path(table)
-        manifest = json.load(open(path))
-        for snap in manifest["snapshots"]:
-            if snap.get("batch_id"):
-                snap["batch_id"] = _legacy(snap["batch_id"])
-            if snap.get("batch_ids"):
-                snap["batch_ids"] = [_legacy(b) for b in snap["batch_ids"]]
-        json.dump(manifest, open(path, "w"))
-
-    retry = incremental_add(spark, batch, wh)  # the legacy retry
-    assert "text_append" in retry.stages_skipped
-    assert cat.read(spark, "text").count() == n_text
-    assert _graph_signature(spark, wh) == sig
 
 
 def test_incremental_update_replaces_content(spark, tmp_path):

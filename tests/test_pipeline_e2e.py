@@ -137,6 +137,33 @@ def test_resume_recomputes_missing_tail(spark, warehouse, tmp_path):
     assert result.counts["nodes"] > 0
 
 
+def test_link_mode_recorded_before_id_map_commits(spark, warehouse, tmp_path,
+                                                 monkeypatch):
+    """The id_map stage records its link_mode before its commits, so a
+    crash inside them cannot leave a resumable warehouse whose recorded
+    mode disagrees with the id_map/link_keys a resume then writes."""
+    wh2 = str(tmp_path / "wh2")
+    shutil.copytree(warehouse, wh2)
+    cat = Catalog(wh2)
+    for table in ("id_map", "link_keys", "nodes", "edges", "mentions"):
+        cat.drop(table)
+    assert cat.get_property("link_mode") == "parity"
+
+    real_commit = Catalog.commit
+
+    def crashing_commit(self, df, table, *args, **kwargs):
+        if table == "id_map":
+            raise RuntimeError("simulated crash in the id_map commit")
+        return real_commit(self, df, table, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "commit", crashing_commit)
+    pages = pages_df(spark, N_PAGES, seed=SEED, partitions=4)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_pipeline(spark, pages, wh2, link_mode="fuzzy", resume=True)
+    assert not cat.exists("id_map")
+    assert cat.get_property("link_mode") == "fuzzy"
+
+
 def test_fuzzy_mode_merges_more(spark, tmp_path):
     """fuzzy linking merges alias families cross-document (acronyms etc.),
     so it yields fewer or equal canonical nodes than parity."""
@@ -205,7 +232,7 @@ def test_catalog_read_runs_no_spark_job(spark, warehouse, tmp_path):
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
     schemas = {t: c.read(spark, t).schema for c, t in tables}
-    recorded = {t: c.table_schema(spark, t) for c, t in tables}
+    recorded = {t: c.table_schema(t) for c, t in tables}
     assert set(tracker.getJobIdsForGroup(None)) == before
 
     for c, t in tables:

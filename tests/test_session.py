@@ -19,7 +19,8 @@ class _RecordingBuilder:
     def appName(self, _name):
         return self
 
-    def master(self, _master):
+    def master(self, master):
+        self.conf["spark.master"] = master
         return self
 
     def config(self, key, value):
@@ -63,3 +64,13 @@ def test_test_session_keeps_c2(spark):
     args = list(runtime.getInputArguments())
     assert args, "the probe reads the driver JVM's flags"
     assert not [a for a in args if "TieredStopAtLevel=1" in a]
+
+
+def test_engine_builder_leaves_the_master_to_spark_submit(recorded):
+    """The spark-submit scripts' session carries the engine's settings
+    but no master, so spark-submit's --master wins."""
+    conf = session.engine_builder("t").getOrCreate()
+    assert "spark.master" not in conf
+    assert conf["spark.sql.adaptive.enabled"] == "true"
+    assert conf["spark.sql.autoBroadcastJoinThreshold"] == "128m"
+    assert conf["spark.driver.defaultJavaOptions"] == "-XX:TieredStopAtLevel=1"

@@ -31,13 +31,12 @@ def main() -> int:
     parser.add_argument("--seed", type=int, default=42, help="page-world seed; a different seed gives a mostly-disjoint entity world (partial key overlap) — the batch-proportional case")
     args = parser.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from kiwi_spark.pipeline import incremental_add
+    from kiwi_spark.session import engine_builder
     from kiwi_spark.sources.catalog import Catalog
     from kiwi_spark.sources.pages import pages_df
 
-    spark = SparkSession.builder.appName("delta-scale-bench").getOrCreate()
+    spark = engine_builder("delta-scale-bench").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     cat = Catalog(args.warehouse)

@@ -26,17 +26,15 @@ def main() -> int:
     parser.add_argument("--warehouse", required=True)
     parser.add_argument("--remove-start", type=int, default=0)
     parser.add_argument("--remove-size", type=int, default=2000)
-    parser.add_argument("--link-mode", default="parity")
     parser.add_argument("--seed", type=int, default=42)
     args = parser.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from kiwi_spark.pipeline import incremental_remove
+    from kiwi_spark.session import engine_builder
     from kiwi_spark.sources.catalog import Catalog
     from kiwi_spark.sources.pages import pages_df
 
-    spark = SparkSession.builder.appName("remove-scale-bench").getOrCreate()
+    spark = engine_builder("remove-scale-bench").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     cat = Catalog(args.warehouse)
@@ -44,9 +42,7 @@ def main() -> int:
     urls = pages_df(
         spark, args.remove_size, start=args.remove_start, seed=args.seed
     ).select("url")
-    result = incremental_remove(
-        spark, urls, args.warehouse, link_mode=args.link_mode
-    )
+    result = incremental_remove(spark, urls, args.warehouse)
     print(
         json.dumps(
             {
