@@ -8,9 +8,10 @@ table (SURVEY/driver contract: deduplication as core training-data ops):
                    Jaccard (the exact baseline; quadratic only within
                    shingle-sharing groups)
 * MinHash + LSH  — k multiply-shift min-hashes over a single md5-derived
-                   base hash per shingle (JVM-side, whole-stage codegen),
-                   banded into buckets, candidates verified with exact
-                   Jaccard
+                   base hash per shingle and their band keys, from one
+                   vectorized per-document kernel (Arrow-batched pandas
+                   UDF); band-bucket self-join, candidates verified with
+                   exact Jaccard JVM-side
 * SimHash        — 64-bit weighted-sign fingerprint (vectorized pandas UDF),
                    16-bit band blocking, Hamming-distance verify JVM-side
 
@@ -35,7 +36,7 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import ArrayType, BinaryType, LongType
 
 DEFAULT_NUM_HASHES = 64
 DEFAULT_BANDS = 16
@@ -246,36 +247,61 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.6,
     )
 
 
-def _minhash_base():
-    """32-bit base hash of a shingle: int of the first 8 hex chars of md5.
+def minhash_band_keys(shingle_lists, a: list[int], b: list[int],
+                      bands: int) -> list[list[bytes] | None]:
+    """The MinHash kernel: LSH band keys of a batch of shingle arrays.
 
-    ONE string hash per shingle; the k min-hash family is derived from it
-    with integer multiply-shift — cheaper than k independent string hashes
-    and bit-reproducible in DuckDB (strpos-over-hex arithmetic)."""
-    return F.conv(F.substring(F.md5(F.col("shingle")), 1, 8), 16, 10).cast("long")
-
-
-def _signatures_from_exploded(exploded: DataFrame, num_hashes: int,
-                              seed: int = 7,
-                              with_count: bool = False) -> DataFrame:
-    a, b = minhash_params(num_hashes, seed)
-    based = exploded.withColumn("base", _minhash_base())
-    aggs = [
-        F.min(
-            (F.lit(a[i]) * F.col("base") + F.lit(b[i])) % F.lit(MINHASH_PRIME)
-        ).alias(f"h{i}")
-        for i in range(num_hashes)
+    Each shingle is hashed once: its base is the big-endian uint32 of the
+    first 4 md5 bytes (= ``conv(substring(md5(s),1,8),16,10)`` in Spark SQL
+    and DuckDB). Hash i of a document is ``min((a[i]·base + b[i]) mod
+    (2^61−1))`` over its shingles, in int64 numpy: a < 2^30 and base, b <
+    2^32 keep every intermediate below 2^63. A band key packs the band's
+    ``len(a) // bands`` hashes as big-endian longs — injective, so two
+    documents share a key exactly when their band tuples are equal. A null
+    or empty array gets ``None`` (no band rows)."""
+    arrays = [() if s is None else s for s in shingle_lists]
+    counts = np.array([len(s) for s in arrays], dtype=np.int64)
+    has = counts > 0
+    rows_per_band = len(a) // bands
+    width = 8 * rows_per_band
+    sig = np.zeros((len(arrays), bands * rows_per_band), dtype=">i8")
+    if has.any():
+        base = np.frombuffer(
+            b"".join(
+                hashlib.md5(sh.encode("utf-8")).digest()[:4]
+                for s in arrays for sh in s
+            ),
+            dtype=">u4",
+        ).astype(np.int64)
+        starts = (np.cumsum(counts) - counts)[has]
+        for i in range(sig.shape[1]):
+            sig[has, i] = np.minimum.reduceat(
+                (a[i] * base + b[i]) % MINHASH_PRIME, starts
+            )
+    return [
+        [row[k * width:(k + 1) * width] for k in range(bands)] if ok else None
+        for row, ok in zip((r.tobytes() for r in sig), has)
     ]
-    if with_count:
-        # shingle arrays are array_distinct by construction, so the group's
-        # row count IS size(shingles) — the verify step's size pre-filter
-        # gets its operand for free inside this aggregation
-        aggs.append(F.count("*").alias("n_shingles"))
-    sig = based.groupBy("doc_id").agg(*aggs)
-    keep = (["n_shingles"] if with_count else [])
-    return sig.select(
-        "doc_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"),
-        *keep,
+
+
+def _band_rows(sh: DataFrame, num_hashes: int, bands: int,
+               seed: int = 7) -> DataFrame:
+    """(doc_id, n, band, bucket) rows of a (doc_id, shingles) table: the
+    kernel as an Arrow-batched pandas UDF, then ``posexplode`` of the key
+    array. ``n`` is ``size(shingles)`` — the arrays are duplicate-free by
+    construction."""
+    a, b = minhash_params(num_hashes, seed)
+
+    @F.pandas_udf(ArrayType(BinaryType()))
+    def band_keys(shingles: pd.Series) -> pd.Series:
+        return pd.Series(minhash_band_keys(shingles, a, b, bands))
+
+    keyed = sh.select(
+        "doc_id", F.size("shingles").alias("n"),
+        band_keys("shingles").alias("keys"),
+    ).localCheckpoint(eager=False)
+    return keyed.select(
+        "doc_id", "n", F.posexplode("keys").alias("band", "bucket")
     )
 
 
@@ -289,16 +315,12 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.6,
     materialization barriers (lazy local checkpoints) pin the plan to one
     pass per expensive stage:
 
-    * the shingle projection feeds the signature aggregation AND the
-      candidate verify join — one tokenize+shingle pass, not three;
-    * the signature table feeds BOTH sides of the band self-join — without
-      the barrier the planner broadcasts one side and recomputes the whole
-      signature lineage for the other (observed: 2× HashAggregate chains
-      in the r6 plan; guide §2.4 "share one computation").
-
-    Band keys are (band, struct-of-longs) slices of the signature — fixed
-    width, no string materialization, byte-equal semantics to the former
-    comma-joined string key (both are injective on the hash tuple).
+    * the shingle projection feeds the band-key kernel AND the candidate
+      verify join — one tokenize+shingle pass, not two;
+    * the band-key table feeds BOTH sides of the band self-join — the
+      kernel (``minhash_band_keys``) turns each shingle array straight into
+      its ``bands`` binary band keys once per document, with no shingle
+      explode or per-hash aggregate (guide §2.4 "share one computation").
 
     Join strategy notes (measured on the sf1 bench tier, where banding
     yields ~4.7M raw / 666k distinct candidates over 50k docs):
@@ -317,42 +339,15 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.6,
       the (small) per-doc shingle table on both joins — candidates are
       O(corpus × collision rate), shingles are O(corpus).
     """
-    rows_per_band = num_hashes // bands
     sh = _shingle_df(docs, n, id_col, text_col).localCheckpoint(eager=False)
-    exploded = sh.select("doc_id", F.explode("shingles").alias("shingle"))
-    sig = _signatures_from_exploded(
-        exploded, num_hashes, seed, with_count=True
-    ).localCheckpoint(eager=False)
-    banded = sig.select(
-        "doc_id",
-        F.col("n_shingles").alias("n"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.struct(
-                            *[
-                                F.element_at(
-                                    F.col("sig"), b * rows_per_band + j + 1
-                                ).alias(f"h{j}")
-                                for j in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "n", "bb.band", "bb.bucket")
+    banded = _band_rows(sh, num_hashes, bands, seed)
 
     # Provably lossless size pre-filter AS A JOIN PREDICATE: J(A,B) ≤
     # min(|A|,|B|)/max(|A|,|B|), so any pair failing the size-ratio test
     # cannot reach the threshold. The shingle count rides on the banded
-    # rows (computed for free inside the signature aggregation), so the
-    # filter runs inside the band join — raw banding collisions drop
-    # BEFORE the distinct's exchange (sf1: 4.7M → ~2.2M rows shuffled)
-    # and the former two candidate×sizes joins disappear outright.
+    # rows, so the filter runs inside the band join — raw banding
+    # collisions drop BEFORE the distinct's exchange (sf1: 4.7M → ~2.2M
+    # rows shuffled) and no candidate×sizes join is needed.
     # Filter-into-inner-join commutation keeps the output identical.
     cand = (
         banded.alias("l")

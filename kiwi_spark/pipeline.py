@@ -105,12 +105,14 @@ def _commit_search_index(cat: Catalog, spark: SparkSession) -> None:
     )
 
 
-def _commit_id_map(cat: Catalog, nodes_doc: DataFrame, link_mode: str) -> None:
+def _commit_id_map(cat: Catalog, nodes_doc: DataFrame, link_mode: str,
+                   batch_id: str | None = None) -> None:
     """Global cross-document linking (blocking + connected components)
     over every doc-level entity. link_keys is the persisted linking-key
     index (the reference's Postgres expression index, sql.ts:16-22) —
     incremental_add semi-joins it to find the touched set in
-    O(new + touched) (operators.delta_link)."""
+    O(new + touched) (operators.delta_link). ``batch_id`` tags the commits
+    of a first add, so its retry's delta pass skips them."""
     from .operators.delta_link import link_keys_df
 
     # record the key family BEFORE the commits (as _views does the bucket
@@ -120,16 +122,20 @@ def _commit_id_map(cat: Catalog, nodes_doc: DataFrame, link_mode: str) -> None:
     _parallel_commits(
         cat,
         [
-            (entity_id_map(nodes_doc, mode=link_mode), "id_map", "deduplicating"),
-            (link_keys_df(nodes_doc, link_mode), "link_keys", "deduplicating"),
+            (entity_id_map(nodes_doc, mode=link_mode), "id_map",
+             "deduplicating", {"batch_id": batch_id}),
+            (link_keys_df(nodes_doc, link_mode), "link_keys",
+             "deduplicating", {"batch_id": batch_id}),
         ],
     )
 
 
 def _commit_graph(spark: SparkSession, cat: Catalog, nodes_doc: DataFrame,
-                  edges_doc: DataFrame, mentions_doc: DataFrame) -> None:
+                  edges_doc: DataFrame, mentions_doc: DataFrame,
+                  batch_id: str | None = None) -> None:
     """Canonical graph over the committed id_map, materialized under the
-    warehouse's recorded bucket count."""
+    warehouse's recorded bucket count; ``batch_id`` as in
+    ``_commit_id_map``."""
     n_buckets = int(cat.get_property("doc_view_buckets"))
     nodes, edges, mentions = canonicalize(
         nodes_doc, edges_doc, mentions_doc, cat.read(spark, "id_map")
@@ -137,9 +143,12 @@ def _commit_graph(spark: SparkSession, cat: Catalog, nodes_doc: DataFrame,
     _parallel_commits(
         cat,
         [
-            (materialize_nodes(nodes, n_buckets), "nodes", "saving"),
-            (materialize_edges(edges, n_buckets), "edges", "saving"),
-            (materialize_mentions(mentions, n_buckets), "mentions", "saving"),
+            (materialize_nodes(nodes, n_buckets), "nodes", "saving",
+             {"batch_id": batch_id}),
+            (materialize_edges(edges, n_buckets), "edges", "saving",
+             {"batch_id": batch_id}),
+            (materialize_mentions(mentions, n_buckets), "mentions", "saving",
+             {"batch_id": batch_id}),
         ],
     )
 
@@ -400,11 +409,14 @@ def incremental_add(
         if "search_index" in stats.timings:
             result.stages_run.append("search_index")
     else:
+        # tagged with the batch id: a retry after a later crash (e.g. in
+        # the auto-compaction) takes the delta path, which then skips
+        # every table instead of re-appending link_keys
         nodes_doc = cat.read(spark, "nodes_doc")
-        _commit_id_map(cat, nodes_doc, link_mode)
+        _commit_id_map(cat, nodes_doc, link_mode, batch_id)
         _commit_graph(
             spark, cat, nodes_doc, cat.read(spark, "edges_doc"),
-            cat.read(spark, "mentions_doc"),
+            cat.read(spark, "mentions_doc"), batch_id,
         )
         result.timings["relink"] = round(time.time() - started, 3)
         result.stages_run = ["text_append", "ingest_append", "relink"]

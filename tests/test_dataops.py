@@ -106,9 +106,27 @@ def test_minhash_lsh_finds_high_jaccard_pairs(spark, docs):
         assert len(lsh) / len(exact) >= 0.9
 
 
+def _py_band_keys(shingles, num_hashes=dedup.DEFAULT_NUM_HASHES,
+                  bands=dedup.DEFAULT_BANDS):
+    """Pure-Python band keys: per band, the band's min-hashes packed as
+    big-endian 8-byte ints."""
+    import hashlib
+
+    a, b = dedup.minhash_params(num_hashes)
+    base = [int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
+            for s in shingles]
+    sig = [min((ai * x + bi) % dedup.MINHASH_PRIME for x in base)
+           for ai, bi in zip(a, b)]
+    r = num_hashes // bands
+    return [
+        b"".join(v.to_bytes(8, "big") for v in sig[k * r:(k + 1) * r])
+        for k in range(bands)
+    ]
+
+
 def test_minhash_shingle_count_equals_shingle_array_size(spark):
     # the size-ratio filter inside minhash_lsh_pairs' band join is lossless
-    # only while the count carried on the signature rows is the number of
+    # only while the count carried on the banded rows is the number of
     # DISTINCT shingles; the repeated-token rows repeat shingles (doc 1 has
     # 7 trigram positions but 3 distinct trigrams)
     rows = [
@@ -122,18 +140,80 @@ def test_minhash_shingle_count_equals_shingle_array_size(spark):
         (8, "Mixed CASE mixed case, MIXED case!"),
     ]
     sh = dedup._shingle_df(spark.createDataFrame(rows, ["doc_id", "text"]), 3)
-    sizes = {
-        r["doc_id"]: r["n"]
-        for r in sh.select("doc_id", F.size("shingles").alias("n")).collect()
+    banded = dedup._band_rows(
+        sh, dedup.DEFAULT_NUM_HASHES, dedup.DEFAULT_BANDS
+    ).collect()
+    assert {r["doc_id"]: r["n"] for r in banded} == {
+        d: len(_py_shingles(t)) for d, t in rows
     }
-    exploded = sh.select("doc_id", F.explode("shingles").alias("shingle"))
-    counts = {
-        r["doc_id"]: r["n_shingles"]
-        for r in dedup._signatures_from_exploded(
-            exploded, dedup.DEFAULT_NUM_HASHES, with_count=True
-        ).collect()
+    # one row per band, its bucket the band's packed min-hashes
+    got = {}
+    for r in banded:
+        got.setdefault(r["doc_id"], {})[r["band"]] = bytes(r["bucket"])
+    assert got == {
+        d: dict(enumerate(_py_band_keys(sorted(_py_shingles(t)))))
+        for d, t in rows
     }
-    assert counts == sizes == {d: len(_py_shingles(t)) for d, t in rows}
+
+
+def test_minhash_params_keep_int64_kernel_exact():
+    # the kernel computes a·base + b in int64: a < 2^30 and b < 2^32 with a
+    # 32-bit base stay below 2^63
+    a, b = dedup.minhash_params(dedup.DEFAULT_NUM_HASHES)
+    assert all(0 < x < 1 << 30 and x % 2 == 1 for x in a)
+    assert all(0 <= x < 1 << 32 for x in b)
+    assert max(a) * ((1 << 32) - 1) + max(b) < 1 << 63
+
+
+def test_minhash_kernel_matches_spark_sql_per_shingle(spark):
+    """The kernel's signature equals the Spark SQL formulation (md5 base,
+    multiply-shift mod 2^61-1, per-document min) shingle by shingle."""
+    import numpy as np
+
+    texts = spark.createDataFrame(
+        [(1, ""), (2, None), (3, "one"), (4, "two words"),
+         (5, "the quick brown fox jumps " * 400)],
+        "doc_id long, text string",
+    )
+    docs = {r["doc_id"]: list(r["shingles"])
+            for r in dedup._shingle_df(texts, 3).collect()}
+    # empty and null text both shingle to the empty string
+    assert docs[1] == docs[2] == [""]
+    docs[6] = ["héllo wörld ça", "日本語 テキスト", "emoji 🙂 x"]
+    docs[7] = ["x" * 5000 + " y"]
+    a, b = dedup.minhash_params(dedup.DEFAULT_NUM_HASHES)
+    shingles = sorted({s for v in docs.values() for s in v})
+    base = F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("long")
+    sql = {
+        r["s"]: list(r["h"])
+        for r in spark.createDataFrame([(s,) for s in shingles], "s string")
+        .select("s", F.array(*[
+            (F.lit(ai) * base + F.lit(bi)) % F.lit(dedup.MINHASH_PRIME)
+            for ai, bi in zip(a, b)
+        ]).alias("h"))
+        .collect()
+    }
+
+    def signatures(shingle_lists):
+        # the signature is the band keys' longs, concatenated
+        return [
+            np.frombuffer(b"".join(keys), dtype=">i8").tolist()
+            for keys in dedup.minhash_band_keys(shingle_lists, a, b, 16)
+        ]
+
+    assert dict(zip(shingles, signatures([[s] for s in shingles]))) == sql
+    ids = sorted(docs)
+    for d, sig in zip(ids, signatures([docs[d] for d in ids])):
+        assert sig == [min(sql[s][i] for s in docs[d])
+                       for i in range(len(a))], d
+    # a null or empty array has no signature, hence no band keys
+    keys = dedup.minhash_band_keys([None, [], docs[3]], a, b, 16)
+    assert keys[:2] == [None, None]
+    assert keys[2] == _py_band_keys(docs[3])
+    # 10 hashes in 4 bands: 4 keys of 2 hashes each, the last 2 hashes
+    # unused (as num_hashes // bands rows per band always did)
+    keys = dedup.minhash_band_keys([docs[3]], a[:10], b[:10], 4)[0]
+    assert keys == _py_band_keys(docs[3], 8, 4)
 
 
 def test_simhash_pairs_hamming(spark, docs):

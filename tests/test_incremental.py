@@ -144,6 +144,36 @@ def test_first_add_retried_after_crash_before_graph(spark, tmp_path,
     assert _graph_signature(spark, wh) == _graph_signature(spark, wh_ref)
 
 
+def test_first_add_retried_after_crash_in_compaction(spark, tmp_path,
+                                                     monkeypatch):
+    """A first add that crashes after its global-pass commits (here in
+    the auto-compaction) is retried through the delta pass, which must
+    find every table already tagged with the batch id and append
+    nothing: link_keys stays free of duplicate rows."""
+    import pytest
+
+    from kiwi_spark import pipeline
+
+    wh = str(tmp_path / "wh")
+    pages = pages_df(spark, 8, seed=5)
+    real_compact = pipeline._auto_compact
+
+    def crashing_compact(*args, **kwargs):
+        raise RuntimeError("simulated crash in the auto-compaction")
+
+    monkeypatch.setattr(pipeline, "_auto_compact", crashing_compact)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        incremental_add(spark, pages, wh)
+    monkeypatch.setattr(pipeline, "_auto_compact", real_compact)
+
+    result = incremental_add(spark, pages, wh)
+    assert "delta_relink" in result.stages_run
+    keys = Catalog(wh).read(spark, "link_keys")
+    n_keys = keys.count()
+    assert n_keys > 0
+    assert n_keys == keys.select("entity_id", "key").distinct().count()
+
+
 def test_add_of_existing_urls_raises(spark, tmp_path):
     """Round 6: re-adding urls the warehouse already holds must raise
     (silent double-ingestion would corrupt n_sources and duplicate doc

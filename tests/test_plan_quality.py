@@ -303,16 +303,19 @@ def test_events_rollup_uses_expand(spark):
 
 def test_minhash_band_join_shj_and_no_duplicated_agg_chain(spark):
     """r7: the band self-join is a (hinted) shuffled-hash join over the
-    checkpointed signature table — the r6 plan broadcast one side and
-    recomputed the whole signature lineage for it (12 HashAggregate nodes;
-    now the signature aggregation lives in the one-shot checkpoint and the
-    visible plan carries only the distinct + per-bucket chains)."""
+    checkpointed band-key table — the r6 plan broadcast one side and
+    recomputed the whole signature lineage for it (12 HashAggregate nodes).
+    The band-key kernel (a pandas UDF) runs once inside the checkpoint's
+    one-shot lineage, so the visible plan carries no Python evaluation and
+    only the distinct + per-bucket aggregate chains."""
     from kiwi_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = _simple_plan(dedup.minhash_lsh_pairs(docs, n=3, threshold=0.7))
     assert plan.count("ShuffledHashJoin") == 1
     assert plan.count("HashAggregate") <= 4
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_simhash_udf_runs_once_behind_checkpoint(spark):
